@@ -1021,7 +1021,9 @@ def q_e1_search_count_by_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conv_id", "turn_idx", "text", F.unix_millis("ts").alias("ts_ms")
     )
     hits = search_encoded(clp_encode_pandas(df), _ARCHIVE_SEARCH_QUERY)
-    return search_count_by_time(hits, bucket_ms=86_400_000)
+    return search_count_by_time(hits, bucket_ms=86_400_000).select(
+        "bucket_start_ms", "n"
+    )
 
 
 # saved-searches set for the one-scan multi-query surface (r6); names

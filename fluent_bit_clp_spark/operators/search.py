@@ -17,9 +17,13 @@ Plan here (the classic prune + verify):
    into a placeholder — so it compiles to the alternation
    ``(?:fragment|PLACEHOLDER)``.  The pattern therefore *over*-selects,
    never under-selects.
-2. Prune: filter the logtype dictionary with the pattern (tiny), broadcast
-   semi-join the encoded table on ``logtype_id`` — or filter ``logtype``
-   directly when no dictionary is supplied.
+2. Prune: collect the ids of the dictionary templates the pattern matches
+   (tiny, on the driver) and filter the table with ``isin`` on them — one
+   Filter, pushed into the parquet scan and evaluated ahead of the
+   variable predicates and the decode (:func:`template_prune`, shared by
+   both layouts).  Without a dictionary, or above ``max_templates``
+   matches, the pattern itself filters ``logtype``, still before the
+   decode.
 3. Verify: decode ONLY the pruned candidates and apply the exact wildcard
    regex to the reconstructed text.  Decode cost is confined to candidate
    rows — the pruning is what makes search on 100 TB viable.
@@ -31,6 +35,8 @@ tests/test_search.py.
 from __future__ import annotations
 
 import re
+from functools import reduce
+from operator import or_
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -230,30 +236,14 @@ def compile_var_predicates(
         for k, e, d in zip(kinds or [], encs or [], dicts or []):
             if d is not None:
                 if ignore_case and _HAS_LETTER.search(d):
-                    if var_dictionary is None:
-                        continue  # no enumeration source — skip, sound
-                    ids = [
-                        r["var_id"]
-                        for r in var_dictionary.where(
-                            F.col("var").rlike(f"(?i)^{re.escape(d)}$")
-                        )
-                        .select("var_id")
-                        .limit(max_ids + 1)
-                        .collect()
-                    ]
-                    if len(ids) > max_ids:
-                        continue
-                    preds.append(
-                        F.arrays_overlap(
-                            F.coalesce(
-                                F.col("dict_var_ids"),
-                                F.array().cast("array<bigint>"),
-                            ),
-                            F.lit(ids).cast("array<bigint>"),
-                        )
-                        if ids
-                        else F.lit(False)
+                    ids = None if var_dictionary is None else _capped_keys(
+                        var_dictionary,
+                        F.col("var").rlike(f"(?i)^{re.escape(d)}$"),
+                        "var_id",
+                        max_ids,
                     )
+                    if ids is not None:  # else no source/over cap: skip, sound
+                        preds.append(_in_dict_vars(ids))
                 else:
                     preds.append(
                         F.array_contains("dict_var_ids", F.lit(_xxh64_str(d)))
@@ -261,6 +251,25 @@ def compile_var_predicates(
             else:
                 preds.append(F.array_contains("encoded_vars", F.lit(e)))
     return preds
+
+
+def _capped_keys(
+    dictionary: DataFrame, where, key: str, cap: int
+) -> list | None:
+    """``key`` of the ``dictionary`` rows matching ``where``, collected on
+    the driver (one job); None when more than ``cap`` rows match."""
+    rows = dictionary.where(where).select(key).limit(cap + 1).collect()
+    return None if len(rows) > cap else [r[0] for r in rows]
+
+
+def _in_dict_vars(ids: list):
+    """The row holds one of the dictionary variables ``ids``."""
+    if not ids:
+        return F.lit(False)
+    return F.arrays_overlap(
+        F.coalesce("dict_var_ids", F.array().cast("array<bigint>")),
+        F.lit(ids).cast("array<bigint>"),
+    )
 
 
 def _dict_only_fragment(frag: str) -> bool:
@@ -336,33 +345,45 @@ def compile_fragment_var_predicates(
     for var_pat, frag in frags:
         if not _dict_only_fragment(frag):
             continue
-        ids = [
-            r["var_id"]
-            for r in var_dictionary.where(F.col("var").rlike(ci + var_pat))
-            .select("var_id")
-            .limit(max_ids + 1)
-            .collect()
-        ]
-        if len(ids) > max_ids:
-            continue
-        in_dict = (
-            F.arrays_overlap(
-                F.coalesce(
-                    F.col("dict_var_ids"),
-                    F.array().cast("array<bigint>"),
-                ),
-                F.lit(ids).cast("array<bigint>"),
-            )
-            if ids
-            else F.lit(False)
+        ids = _capped_keys(
+            var_dictionary, F.col("var").rlike(ci + var_pat), "var_id", max_ids
         )
-        literal = F.col("logtype").rlike(ci + re.escape(frag))
-        preds.append(literal | in_dict)
+        if ids is not None:
+            literal = F.col("logtype").rlike(ci + re.escape(frag))
+            preds.append(literal | _in_dict_vars(ids))
     return preds
 
 
 def logtype_matches(pattern: str, dictionary: DataFrame) -> DataFrame:
     return dictionary.where(F.col("logtype").rlike(pattern))
+
+
+def template_prune(
+    table: DataFrame,
+    dictionary: DataFrame,
+    patterns: list[str],
+    key: str,
+    column: str,
+    max_templates: int = 1024,
+) -> DataFrame:
+    """The template prune both layouts share: ``table`` restricted to the
+    rows whose ``column`` is the ``key`` of a ``dictionary`` template
+    matching ANY of ``patterns``.  The keys are collected on the driver
+    (capped at ``max_templates``) into a literal ``isin``, which Spark
+    pushes into the parquet scan (``PushedFilters: In(column, ...)``) and
+    evaluates ahead of every later predicate, so the variable predicates
+    and the decode see only rows of a matching template.  The dictionary
+    must COVER the table, so zero matches proves zero hits: the empty
+    frame, no scan (``limit(0)`` folds to an empty relation).  Over the
+    cap the table comes back unfiltered and the callers' relaxed
+    ``logtype`` rlike, also ahead of the decode, prunes instead."""
+    wanted = reduce(or_, [F.col("logtype").rlike(p) for p in patterns])
+    keys = _capped_keys(dictionary, wanted, key, max_templates)
+    if keys is None:
+        return table
+    if not keys:
+        return table.limit(0)
+    return table.where(F.col(column).isin(sorted(set(keys))))
 
 
 def search_encoded(
@@ -372,12 +393,16 @@ def search_encoded(
     mode: str = MODE_I64,
     var_dictionary: DataFrame | None = None,
     ignore_case: bool = False,
+    max_templates: int = 1024,
 ) -> DataFrame:
     """Rows of the encoded table matching ``query``.
 
-    Prune order: logtype pattern → per-variable predicates
-    (:func:`compile_var_predicates` — concrete values prune on the
-    encoded/dictionary columns, no decode) → wildcard-fragment
+    Prune order, all in ONE Filter that Catalyst keeps in this order:
+    template ``isin`` from ``dictionary`` when supplied
+    (:func:`template_prune` — a ``logtype_dict(logtype_id, logtype)``
+    covering the table) → relaxed logtype pattern → per-variable
+    predicates (:func:`compile_var_predicates` — concrete values prune
+    on the encoded/dictionary columns, no decode) → wildcard-fragment
     enumeration against ``var_dictionary`` when supplied
     (:func:`compile_fragment_var_predicates` — the CLP paper's
     dictionary-compiled sub-queries, tightening fragment queries like
@@ -391,10 +416,11 @@ def search_encoded(
     tokens/fragments."""
     pattern = compile_relaxed_pattern(query, ignore_case)
     if dictionary is not None:
-        ids = F.broadcast(logtype_matches(pattern, dictionary).select("logtype_id"))
-        cand = encoded.join(ids, "logtype_id", "left_semi")
-    else:
-        cand = encoded.where(F.col("logtype").rlike(pattern))
+        encoded = template_prune(
+            encoded, dictionary, [pattern], "logtype_id", "logtype_id",
+            max_templates,
+        )
+    cand = encoded.where(F.col("logtype").rlike(pattern))
     for pred in compile_var_predicates(
         query, mode, ignore_case, var_dictionary
     ):
@@ -417,6 +443,7 @@ def search_encoded_multi(
     mode: str = MODE_I64,
     var_dictionary: DataFrame | None = None,
     ignore_case: bool = False,
+    max_templates: int = 1024,
 ) -> DataFrame:
     """Run MANY wildcard queries in ONE pass — the saved-searches /
     dashboard shape.  ``queries`` maps a query name to its wildcard
@@ -425,13 +452,14 @@ def search_encoded_multi(
 
     Scale rationale: N separate :func:`search_encoded` calls cost N scans
     and up to N decodes of overlapping candidate sets.  Here the scan is
-    pruned ONCE with the union of the per-query prunes (dictionary ids
-    unioned into one broadcast semi-join, or the OR of the per-query
-    logtype-pattern+variable predicates), the survivors are decoded
-    ONCE, and per-query attribution is a vectorized array construction
-    over the decoded column — per-query exact verify plus that query's
-    own prune predicates re-applied, so results are row-for-row identical
-    to running each query alone.  At 100 TB the scan dominates; this
+    pruned ONCE — the template ``isin`` over the union of every query's
+    matching templates (:func:`template_prune`, when ``dictionary`` is
+    supplied), then the OR of the per-query logtype-pattern+variable
+    predicates — the survivors are decoded ONCE, and per-query
+    attribution is a vectorized array construction over the decoded
+    column: per-query exact verify plus that query's own prune
+    predicates re-applied, so results are row-for-row identical to
+    running each query alone.  At 100 TB the scan dominates; this
     amortizes it across the whole dashboard.
     """
     if not queries:
@@ -450,23 +478,13 @@ def search_encoded_multi(
             prune = prune & p
         per_query[name] = prune
     if dictionary is not None:
-        # one broadcast semi-join on the UNION of every query's matching
-        # template ids (distinct — a template wanted by several queries
-        # enters once); per-query attribution below re-checks the
-        # pattern, so the union never cross-contaminates
-        ids = None
-        for name in queries:
-            m = logtype_matches(patterns[name], dictionary).select("logtype_id")
-            ids = m if ids is None else ids.unionByName(m)
-        cand = encoded.join(
-            F.broadcast(ids.distinct()), "logtype_id", "left_semi"
+        encoded = template_prune(
+            encoded, dictionary, list(patterns.values()), "logtype_id",
+            "logtype_id", max_templates,
         )
-    else:
-        combined = None
-        for prune in per_query.values():
-            combined = prune if combined is None else (combined | prune)
-        cand = encoded.where(combined)
-    decoded = cand.withColumn("_decoded", clp_decode_column(mode=mode))
+    decoded = encoded.where(reduce(or_, per_query.values())).withColumn(
+        "_decoded", clp_decode_column(mode=mode)
+    )
     tags = F.array_compact(
         F.array(
             *[
@@ -565,29 +583,30 @@ def search_count_by_time(
     happens AFTER decode-verify, so relaxed-prune over-selection can
     never inflate a bucket.
 
-    Returns ``(bucket_start_ms, n)``.  Bucket start is computed with
-    ``ts - pmod(ts, bucket)`` — exact bigint arithmetic (no double
-    rounding at ns-epoch magnitudes) with floor semantics for negative
-    timestamps.  Scale: map-side-combinable count, one narrow exchange
-    of (bucket, partial-count) rows — the decode-verify cost dominates,
-    and only candidate rows reach it.
+    Returns ``(query_name, bucket_start_ms, n)`` in every mode.  Bucket
+    start is computed with ``ts - pmod(ts, bucket)`` — exact bigint
+    arithmetic (no double rounding at ns-epoch magnitudes) with floor
+    semantics for negative timestamps.  Scale: map-side-combinable count,
+    one narrow exchange of (bucket, partial-count) rows — the
+    decode-verify cost dominates, and only candidate rows reach it.
 
     A multi-query result (``query_name`` column present) is counted PER
-    QUERY — ``(query_name, bucket_start_ms, n)`` (ADVICE r6: summing
-    across queries double-counted rows matching several queries and gave
-    the dashboard no per-panel series).
+    QUERY (ADVICE r6: summing across queries double-counted rows matching
+    several queries and gave the dashboard no per-panel series); a
+    single-query result is named ``'default'``, so both modes share one
+    output schema.
     """
     if bucket_ms < 1:
         raise ValueError(f"bucket_ms must be >= 1, got {bucket_ms}")
     bucket = (F.col(ts_col) - F.pmod(F.col(ts_col), F.lit(bucket_ms))).alias(
         "bucket_start_ms"
     )
-    keys = (
-        [F.col("query_name"), bucket]
+    name = (
+        F.col("query_name")
         if "query_name" in hits.columns
-        else [bucket]
+        else F.lit("default").alias("query_name")
     )
-    return hits.groupBy(*keys).agg(F.count("*").alias("n"))
+    return hits.groupBy(name, bucket).agg(F.count("*").alias("n"))
 
 
 class StaleArchiveDictionaryError(ValueError):
@@ -660,25 +679,23 @@ def search_stored_archive(
 ) -> DataFrame:
     """Search an ARCHIVE-layout table with SCAN-level template pruning.
 
-    The working-layout path prunes with a ``logtype_id`` semi-join —
-    correct, but the filter only applies after every row is read.  Here
-    the matching templates' STORED strings (kind-typed) become an
-    ``isin`` predicate on the stored ``logtype`` column, which Spark
-    pushes into the parquet scan (``PushedFilters: In(logtype, ...)``):
-    on a ``compact_archive``-clustered table, row groups whose footer
-    min/max excludes every wanted template are skipped without reading
-    a byte of them — the CLP archive-search shape.
+    The same :func:`template_prune` as the working layout, keyed on the
+    templates' STORED (kind-typed) strings: the ``isin`` lands on the
+    stored ``logtype`` column in the parquet scan (``PushedFilters:
+    In(logtype, ...)``), so on a ``compact_archive``-clustered table row
+    groups whose footer min/max excludes every wanted template are
+    skipped without reading a byte of them — the CLP archive-search
+    shape.
 
     ``archive_dictionary`` must COVER the archive (built from it via
     :func:`archive_logtype_dictionary`, or maintained alongside the
     writes) — a stale dictionary missing templates would silently drop
-    their rows, so zero dictionary matches is treated as proof of zero
+    their rows, since zero dictionary matches is taken as proof of zero
     hits (no scan at all).  ``max_templates`` caps the driver-collected
-    IN-list (same bound discipline as the capped id collect); above it
-    the pushdown is skipped and the filter runs post-scan — identical
-    results either way.  Remaining stages (variable predicates, fragment predicates,
-    decode-verify) are exactly :func:`search_encoded` over the
-    reconstructed rows.
+    IN-list; above it the relaxed pattern filters the reconstructed
+    ``logtype`` instead — identical results either way.  Remaining
+    stages (variable predicates, fragment predicates, decode-verify) are
+    exactly :func:`search_encoded` over the reconstructed rows.
 
     ``verify_coverage=True`` (opt-in — it costs one column-pruned
     distinct pass over the archive) proves the covering contract instead
@@ -705,13 +722,8 @@ def search_stored_archive(
     from fluent_bit_clp_spark.operators.archive import from_archive
 
     pruned = _pruned_archive(
-        archive,
-        [compile_relaxed_pattern(query, ignore_case)],
-        archive_dictionary,
-        max_templates,
-        verify_coverage,
-        time_range,
-        ts_col,
+        archive, [compile_relaxed_pattern(query, ignore_case)],
+        archive_dictionary, max_templates, verify_coverage, time_range, ts_col,
     )
     return search_encoded(
         from_archive(pruned), query, None, mode, var_dictionary, ignore_case
@@ -749,19 +761,9 @@ def _pruned_archive(
         # unsearchable by construction — decode-verify can never match
         # them — so they are outside the covering contract, exactly as
         # archive_logtype_dictionary excludes them
-        uncovered = (
-            archive.select("logtype")
-            .where(F.col("logtype").isNotNull())
-            .distinct()
-            .join(
-                archive_dictionary.select(
-                    F.col("logtype_stored").alias("logtype")
-                ),
-                "logtype",
-                "left_anti",
-            )
-            .count()
-        )
+        stored = archive.select("logtype").where(F.col("logtype").isNotNull())
+        known = archive_dictionary.select(F.col("logtype_stored").alias("logtype"))
+        uncovered = stored.distinct().join(known, "logtype", "left_anti").count()
         if uncovered:
             raise StaleArchiveDictionaryError(
                 f"archive dictionary is stale: {uncovered} stored "
@@ -770,27 +772,10 @@ def _pruned_archive(
                 "with archive_logtype_dictionary(archive) or extend the "
                 "persisted dictionary at write time"
             )
-    wanted = None
-    for p in patterns:
-        m = F.col("logtype").rlike(p)
-        wanted = m if wanted is None else (wanted | m)
-    matches = archive_dictionary.where(wanted)
-    stored = [
-        r[0]
-        for r in matches.select("logtype_stored")
-        .distinct()
-        .limit(max_templates + 1)
-        .collect()
-    ]
-    if not stored:
-        # the dictionary covers this archive (built from it, or
-        # maintained alongside the writes — the documented contract), so
-        # zero template matches PROVES zero hits: return the empty frame
-        # without scanning (limit(0) folds to a LocalTableScan)
-        return archive.limit(0)
-    if len(stored) <= max_templates:
-        return archive.where(F.col("logtype").isin(stored))
-    return archive  # over-cap: post-scan filtering, same results
+    return template_prune(
+        archive, archive_dictionary, patterns, "logtype_stored", "logtype",
+        max_templates,
+    )
 
 
 def search_stored_archive_multi(
@@ -819,17 +804,8 @@ def search_stored_archive_multi(
     pruned = _pruned_archive(
         archive,
         [compile_relaxed_pattern(q, ignore_case) for q in queries.values()],
-        archive_dictionary,
-        max_templates,
-        verify_coverage,
-        time_range,
-        ts_col,
+        archive_dictionary, max_templates, verify_coverage, time_range, ts_col,
     )
     return search_encoded_multi(
-        from_archive(pruned),
-        queries,
-        None,
-        mode,
-        var_dictionary,
-        ignore_case,
+        from_archive(pruned), queries, None, mode, var_dictionary, ignore_case
     )

@@ -73,6 +73,39 @@ OUTPUT_COLS = [
     "dict_var_ids",
 ]
 
+# Committed-table schemas, fixed per sink layout whatever the encoding
+# mode (pinned against the written files in tests/test_pipeline.py):
+# a read with a known schema runs no schema-inference job.  ``sink``, the
+# partition column, reads back last.
+_SINK_HEAD = (
+    "conv_id string, turn_idx int, role string, tool string, ts_ms bigint, "
+    "level_id int, chunk_id bigint, ir_bin_id bigint, byte_start bigint, "
+    "row_bytes bigint, "
+)
+SINKS_SCHEMAS = {
+    "working": _SINK_HEAD + "logtype_id bigint, logtype string, "
+    "var_kinds array<int>, encoded_vars array<bigint>, "
+    "dict_vars array<string>, dict_var_ids array<bigint>, "
+    "encode_failed boolean, sink string",
+    "archive": _SINK_HEAD + "logtype string, encoded_vars array<bigint>, "
+    "dict_vars array<string>, encode_failed boolean, sink string",
+}
+ARCHIVE_DICT_DIR = "archive_logtype_dict"
+DICT_SCHEMAS = {
+    "logtype_dict": "logtype_id bigint, logtype string",
+    "var_dict": "var_id bigint, var string",
+    ARCHIVE_DICT_DIR: "logtype_stored string, logtype string, logtype_id bigint",
+}
+
+
+def read_committed(
+    spark: SparkSession, out_dir: str, table: str, layout: str = "working"
+) -> DataFrame:
+    """A committed table of ``out_dir`` (``sinks`` in ``layout``, or one
+    of :data:`DICT_SCHEMAS`) read with its fixed schema."""
+    schema = SINKS_SCHEMAS[layout] if table == "sinks" else DICT_SCHEMAS[table]
+    return spark.read.schema(schema).parquet(os.path.join(out_dir, table))
+
 
 def parse_normalize(df: DataFrame) -> DataFrame:
     """P1-P3: timestamp normalization to Unix millis + failure flagging.
@@ -297,7 +330,7 @@ def run_to_sinks(
     # layout-agnostic: compact dict_vars carries the same non-null set);
     # consume_tbl is the working-layout view — Catalyst prunes the
     # from_archive reconstruction down to whatever each reader touches.
-    written_tbl = spark.read.parquet(sinks_path)
+    written_tbl = read_committed(spark, out_dir, "sinks", sink_layout)
     if sink_layout == "archive":
         from fluent_bit_clp_spark.operators.archive import from_archive
 
@@ -372,9 +405,6 @@ def run_to_sinks(
     }
 
 
-ARCHIVE_DICT_DIR = "archive_logtype_dict"
-
-
 def _persist_archive_dictionary(
     spark: SparkSession, written_tbl: DataFrame, out_dir: str
 ) -> None:
@@ -383,7 +413,9 @@ def _persist_archive_dictionary(
     )
 
     path = os.path.join(out_dir, ARCHIVE_DICT_DIR)
-    existing = spark.read.parquet(path) if os.path.isdir(path) else None
+    existing = None
+    if os.path.isdir(path):
+        existing = read_committed(spark, out_dir, ARCHIVE_DICT_DIR)
     merged = extend_archive_dictionary(written_tbl, existing)
     if existing is None:
         merged.write.mode("overwrite").parquet(path)
@@ -412,7 +444,7 @@ def load_archive_dictionary(
             f"{marker.get('sink_layout', 'working')!r}; the stored-template "
             "dictionary exists only for archive-layout runs"
         )
-    return spark.read.parquet(os.path.join(out_dir, ARCHIVE_DICT_DIR))
+    return read_committed(spark, out_dir, ARCHIVE_DICT_DIR)
 
 
 def search_run(
@@ -427,17 +459,16 @@ def search_run(
     """Search a COMMITTED run in one call — the ``clg <archives> query``
     UX: layout comes from the data marker, the prune dictionaries are the
     run's PERSISTED ones (written by phase 3 / extended cross-run for
-    archives), nothing is recomputed per search session.
+    archives), read with their fixed schemas; nothing is recomputed or
+    inferred per search.
 
     ``query`` is a CLP wildcard string, or a ``{name: wildcard}`` dict
     for the one-scan multi-query path (result carries ``query_name``).
-    Archive-layout runs get scan-level template pruning
-    (:func:`operators.search.search_stored_archive`); working-layout
-    runs get the broadcast dictionary semi-join
-    (:func:`operators.search.search_encoded`).  ``sink``/``time_range``
-    bound the scan first (both land in the parquet scan's pushed
-    filters; on a time-clustered archive the window skips row groups on
-    footer stats)."""
+    Both layouts prune with the scan-level template ``isin`` of
+    :func:`operators.search.template_prune` (stored template for archive
+    runs, ``logtype_id`` for working runs), so only rows of a matching
+    template are decoded.  ``sink``/``time_range`` bound the scan first
+    (both land in the parquet scan's pushed filters)."""
     from fluent_bit_clp_spark.operators.search import (
         search_encoded,
         search_encoded_multi,
@@ -447,36 +478,25 @@ def search_run(
 
     marker = lineage.read_data_marker(out_dir, run_id)
     mode = marker.get("encoding_mode", "i64")
-    tbl = spark.read.parquet(os.path.join(out_dir, "sinks"))
+    layout = marker.get("sink_layout", "working")
+    tbl = read_committed(spark, out_dir, "sinks", layout)
     if sink is not None:
         tbl = tbl.where(F.col("sink") == sink)
-    vd = spark.read.parquet(os.path.join(out_dir, "var_dict"))
     multi = isinstance(query, dict)
-    if marker.get("sink_layout", "working") == "archive":
-        adict = spark.read.parquet(os.path.join(out_dir, ARCHIVE_DICT_DIR))
+    kw = dict(
+        mode=mode,
+        var_dictionary=read_committed(spark, out_dir, "var_dict"),
+        ignore_case=ignore_case,
+    )
+    if layout == "archive":
         fn = search_stored_archive_multi if multi else search_stored_archive
-        return fn(
-            tbl,
-            query,
-            adict,
-            mode=mode,
-            var_dictionary=vd,
-            time_range=time_range,
-            ignore_case=ignore_case,
-        )
+        adict = read_committed(spark, out_dir, ARCHIVE_DICT_DIR)
+        return fn(tbl, query, adict, time_range=time_range, **kw)
     if time_range is not None:
         lo, hi = time_range
         tbl = tbl.where(F.col("ts_ms").between(F.lit(lo), F.lit(hi)))
-    ld = spark.read.parquet(os.path.join(out_dir, "logtype_dict"))
     fn = search_encoded_multi if multi else search_encoded
-    return fn(
-        tbl,
-        query,
-        dictionary=ld,
-        mode=mode,
-        var_dictionary=vd,
-        ignore_case=ignore_case,
-    )
+    return fn(tbl, query, read_committed(spark, out_dir, "logtype_dict"), **kw)
 
 
 def load_sinks(
@@ -491,9 +511,11 @@ def load_sinks(
     ``load_sinks(...)`` still scans a single column (pinned in
     tests/test_archive.py::test_from_archive_prunes_unused_reconstruction).
     """
-    marker = lineage.read_data_marker(out_dir, run_id)
-    tbl = spark.read.parquet(os.path.join(out_dir, "sinks"))
-    if marker.get("sink_layout", "working") == "archive":
+    layout = lineage.read_data_marker(out_dir, run_id).get(
+        "sink_layout", "working"
+    )
+    tbl = read_committed(spark, out_dir, "sinks", layout)
+    if layout == "archive":
         from fluent_bit_clp_spark.operators.archive import from_archive
 
         return from_archive(tbl)

@@ -26,8 +26,8 @@ Modes (mutually exclusive):
   (single --query only).
 
 Scale shape: one pruned scan of the store (template-isin pushdown on
-archive-layout runs; broadcast dictionary semi-join on working runs),
-decode confined to candidates, output written partitioned by sink.
+either layout), decode confined to candidates, output written
+partitioned by sink.
 """
 
 from __future__ import annotations
@@ -61,7 +61,11 @@ def search(
         search_with_context,
     )
     from fluent_bit_clp_spark.plans import lineage
-    from fluent_bit_clp_spark.plans.pipeline import load_sinks, search_run
+    from fluent_bit_clp_spark.plans.pipeline import (
+        load_sinks,
+        read_committed,
+        search_run,
+    )
 
     if sum([count_by_time is not None, context is not None, profile]) > 1:
         raise ValueError(
@@ -111,13 +115,9 @@ def search(
             single,
             n_before=nb,
             n_after=na,
-            dictionary=spark.read.parquet(
-                os.path.join(input_root, "logtype_dict")
-            ),
+            dictionary=read_committed(spark, input_root, "logtype_dict"),
             mode=marker.get("encoding_mode", "i64"),
-            var_dictionary=spark.read.parquet(
-                os.path.join(input_root, "var_dict")
-            ),
+            var_dictionary=read_committed(spark, input_root, "var_dict"),
             ignore_case=ignore_case,
         )
         mode = marker.get("encoding_mode", "i64")

@@ -722,3 +722,145 @@ def test_search_logs_profile_mode(spark, tmp_path):
     n_match = df.where(F.col("text").rlike(pat)).count()
     # identical duplicate queries: union dedups, rows counted once
     assert p2.agg(F.sum("n_rows")).collect()[0][0] == n_match
+
+
+# --- committed-run search: fixed schemas, template prune, degenerate runs --
+
+_DASHBOARD = {
+    "tasks": "Task * started by user * at attempt *",
+    "conn": "Retrying container-* after *s: connection reset by peer",
+    "api": "GET /api/v2/users/* took * ms",
+}
+
+
+@pytest.fixture(scope="module")
+def committed(spark, tmp_path_factory):
+    """One small committed run (edge rows included) per layout and mode."""
+    from fluent_bit_clp_spark.sources.tables import JobConfig
+
+    df = transcripts(spark, 300)
+    base = tmp_path_factory.mktemp("committed")
+    roots = {}
+    for layout in ("working", "archive"):
+        for mode in ("i64", "4byte"):
+            root = str(base / f"{layout}_{mode}")
+            cfg = JobConfig(sink_layout=layout, encoding_mode=mode)
+            run_to_sinks(spark, df, root, "run-c", cfg=cfg)
+            roots[layout, mode] = root
+    return df, roots
+
+
+@pytest.mark.parametrize("mode", ["i64", "4byte"])
+@pytest.mark.parametrize("layout", ["working", "archive"])
+def test_committed_schemas_equal_constants(spark, committed, layout, mode):
+    """Schema-drift guard: every committed table's inferred schema is the
+    constant search_run and the read-backs use instead of inferring."""
+    from fluent_bit_clp_spark.plans.pipeline import (
+        ARCHIVE_DICT_DIR,
+        DICT_SCHEMAS,
+        SINKS_SCHEMAS,
+    )
+
+    root = committed[1][layout, mode]
+    tables = {"sinks": SINKS_SCHEMAS[layout], **DICT_SCHEMAS}
+    if layout == "working":
+        assert not os.path.exists(os.path.join(root, ARCHIVE_DICT_DIR))
+        del tables[ARCHIVE_DICT_DIR]
+    for name, ddl in tables.items():
+        path = os.path.join(root, name)
+        inferred = spark.read.parquet(path).schema
+        assert inferred == spark.read.schema(ddl).parquet(path).schema, name
+
+
+def _prune_precedes_decode(plan: str) -> bool:
+    """The fused Filter tests the template ids before any decode."""
+    filt = next(
+        ln for ln in plan.splitlines() if "Filter" in ln and "logtype_id" in ln
+    )
+    decode = filt.find("zip_with(")
+    return decode == -1 or filt.index("logtype_id") < decode
+
+
+@pytest.mark.parametrize(
+    "query", ["Retrying container-* after *s: *", _DASHBOARD]
+)
+def test_search_run_working_plan_has_no_join(spark, committed, query):
+    """Plan-shape pin: the working-layout template prune is an ``isin`` on
+    logtype_id pushed into the scan, ahead of the decode — no join.  Both
+    queries match several templates (one would plan as ``EqualTo``)."""
+    import re
+
+    from fluent_bit_clp_spark.plans.pipeline import search_run
+
+    out = search_run(spark, committed[1]["working", "i64"], query, "run-c")
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan[:2000]
+    pushed = re.search(r"PushedFilters: \[[^\n]*", plan).group(0)
+    assert "In(logtype_id, [" in pushed, pushed[:500]
+    assert _prune_precedes_decode(plan), plan[:2000]
+
+
+@pytest.mark.parametrize("mode", ["i64", "4byte"])
+@pytest.mark.parametrize("layout", ["working", "archive"])
+def test_search_run_equals_raw_text_match(spark, committed, layout, mode):
+    """Single and dashboard queries return exactly the input rows whose raw
+    text matches ``exact_text_pattern``."""
+    from fluent_bit_clp_spark.operators.search import exact_text_pattern
+    from fluent_bit_clp_spark.plans.pipeline import search_run
+
+    df, roots = committed
+    keys = ("conv_id", "turn_idx")
+
+    def raw(q):
+        hits = df.where(F.col("text").rlike(exact_text_pattern(q)))
+        return sorted(tuple(r) for r in hits.select(*keys).collect())
+
+    want = {name: raw(q) for name, q in _DASHBOARD.items()}
+    for name, q in _DASHBOARD.items():
+        got = search_run(spark, roots[layout, mode], q, "run-c")
+        assert sorted(tuple(r) for r in got.select(*keys).collect()) == (
+            want[name]
+        ), name
+        assert want[name]
+    multi = search_run(spark, roots[layout, mode], _DASHBOARD, "run-c")
+    got_m = sorted(tuple(r) for r in multi.select("query_name", *keys).collect())
+    assert got_m == sorted((n, *k) for n, ks in want.items() for k in ks)
+
+
+@pytest.mark.parametrize("layout", ["working", "archive"])
+def test_search_run_zero_template_matches_scans_nothing(
+    spark, committed, layout
+):
+    """Degenerate input: a query no template matches returns the empty
+    frame with the usual schema (``query_name`` on the dashboard path)
+    and plans no scan of the sinks table."""
+    from fluent_bit_clp_spark.plans.pipeline import search_run
+
+    root = committed[1][layout, "i64"]
+    for query in ("zz-nothing-zz", {"none": "zz-nothing-zz"}):
+        hit = _DASHBOARD["tasks"]
+        like = {"tasks": hit} if isinstance(query, dict) else hit
+        out = search_run(spark, root, query, "run-c")
+        assert out.schema == search_run(spark, root, like, "run-c").schema
+        assert out.collect() == []
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan" not in plan and "LocalTableScan" in plan, plan
+    assert "query_name" in out.columns
+
+
+@pytest.mark.parametrize("layout", ["working", "archive"])
+def test_search_run_all_encode_failed_run(spark, tmp_path, tiny, layout):
+    """Degenerate input: a run whose every row failed to encode (null text,
+    so null logtype) searches to zero hits without raising."""
+    from fluent_bit_clp_spark.plans.pipeline import search_run
+    from fluent_bit_clp_spark.sources.tables import JobConfig
+
+    df = tiny.limit(20).withColumn("text", F.lit(None).cast("string"))
+    root = str(tmp_path / f"nulls_{layout}")
+    res = run_to_sinks(
+        spark, df, root, "run-n", cfg=JobConfig(sink_layout=layout)
+    )
+    assert res["ingest"]["encode_failures"] == 20
+    assert search_run(spark, root, _DASHBOARD["tasks"], "run-n").count() == 0
+    assert search_run(spark, root, _DASHBOARD, "run-n").count() == 0

@@ -1062,3 +1062,69 @@ def test_property_stored_archive_search_equals_naive(spark, cq, fold):
         ).collect()
     )
     assert got == want and len(want) >= 1
+
+
+# --- template prune: over-cap fallback and zero matches (both layouts) ------
+
+_MULTI_TEMPLATE_QUERY = "Retrying container-* after *s: *"
+
+
+def _layout_inputs(encoded, layout):
+    """(table, dictionary, search, search_multi) for one layout."""
+    from fluent_bit_clp_spark.operators.archive import to_archive
+    from fluent_bit_clp_spark.operators.search import (
+        archive_logtype_dictionary,
+        search_encoded_multi,
+        search_stored_archive,
+        search_stored_archive_multi,
+    )
+
+    if layout == "working":
+        return (encoded, logtype_dictionary(encoded), search_encoded,
+                search_encoded_multi)
+    arch = to_archive(encoded)
+    return (arch, archive_logtype_dictionary(arch), search_stored_archive,
+            search_stored_archive_multi)
+
+
+@pytest.mark.parametrize("layout", ["working", "archive"])
+def test_template_prune_over_cap_equals_capped(spark, encoded, layout):
+    """Above ``max_templates`` the prune falls back to the relaxed logtype
+    pattern; the rows are the same as with the template ``isin``."""
+    tbl, d, search, search_multi = _layout_inputs(encoded, layout)
+    q = _MULTI_TEMPLATE_QUERY
+    assert d.where(F.col("logtype").rlike(compile_relaxed_pattern(q))).count() > 1
+
+    def keys(df, *extra):
+        return sorted(map(tuple, df.select(*extra, "conv_id", "turn_idx").collect()))
+
+    capped = keys(search(tbl, q, d))
+    assert capped == keys(_naive(encoded, q))
+    assert keys(search(tbl, q, d, max_templates=1)) == capped
+    qs = {"retry": q, "tasks": "Task * started by user * at attempt *"}
+    multi = keys(search_multi(tbl, qs, d), "query_name")
+    assert multi == keys(search_multi(tbl, qs, d, max_templates=1), "query_name")
+    assert {m[0] for m in multi} == set(qs)
+
+
+@pytest.mark.parametrize("layout", ["working", "archive"])
+def test_template_prune_zero_matches_scans_nothing(
+    spark, tmp_path, encoded, layout
+):
+    """Zero template matches: empty result, unchanged schema
+    (``query_name`` included on the multi path), no scan in the plan."""
+    tbl, d, search, search_multi = _layout_inputs(encoded, layout)
+    path = str(tmp_path / layout)
+    tbl.write.parquet(path)
+    tbl = spark.read.parquet(path)
+    q, none = "Task * started by user * at attempt *", "zz-nothing-zz"
+    for run, hit, miss in (
+        (search, q, none),
+        (search_multi, {"a": q}, {"a": none}),
+    ):
+        out = run(tbl, miss, d)
+        assert out.schema == run(tbl, hit, d).schema
+        assert out.collect() == []
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan" not in plan, plan
+    assert "query_name" in out.columns
