@@ -5,6 +5,9 @@ Each (sink, chunk_id) group serializes its events — in (conv_id, turn_idx)
 order — into ONE compressed binary blob, mirroring the plugin's
 IR-then-zstd writer chain (`internal/irzstd/writer.go:100-113`) and the
 explicit end-of-stream byte on close (`internal/irzstd/disk.go:191-222`).
+The groups run as a grouped ``applyInArrow``: the serializer reads the
+group's Arrow columns directly (no pandas conversion) and appends every
+event to one buffer with precompiled ``struct`` packers.
 
 Serialization is a compact length-prefixed layout (our own IR framing; the
 upstream CLP IR byte protocol lives in the clp-ffi-go submodule, which is
@@ -51,6 +54,8 @@ from __future__ import annotations
 import struct
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 try:  # pragma: no cover - environment probe
@@ -76,19 +81,17 @@ except ImportError:  # pragma: no cover
         # are decompressible by any zstd tooling and the `.zst` object
         # extension is truthful.  Streaming API → no decompressed-size
         # bookkeeping needed.
-        import pyarrow as _pa
-
-        _pa.CompressedOutputStream(_pa.BufferOutputStream(), "zstd")
+        pa.CompressedOutputStream(pa.BufferOutputStream(), "zstd")
 
         def _compress(b: bytes) -> bytes:
-            buf = _pa.BufferOutputStream()
-            with _pa.CompressedOutputStream(buf, "zstd") as z:
+            buf = pa.BufferOutputStream()
+            with pa.CompressedOutputStream(buf, "zstd") as z:
                 z.write(b)
             return buf.getvalue().to_pybytes()
 
         def _decompress(b: bytes) -> bytes:
             return bytes(
-                _pa.CompressedInputStream(_pa.BufferReader(b), "zstd").read()
+                pa.CompressedInputStream(pa.BufferReader(b), "zstd").read()
             )
 
         CODEC = "zstd"
@@ -152,15 +155,12 @@ def _object_key(sink: str, chunk_id: int, first_ts_ms, blob: bytes) -> str:
     return f"{sink}_{chunk_id}_{stamp}_{cid}.{ext}"
 
 
-def _varint(n: int) -> bytes:
-    """Unsigned LEB128."""
-    out = bytearray()
-    while True:
-        b7 = n & 0x7F
+def _put_varint(out: bytearray, n: int) -> None:
+    """Append unsigned LEB128."""
+    while n >= 0x80:
+        out.append(n & 0x7F | 0x80)
         n >>= 7
-        out.append(b7 | (0x80 if n else 0))
-        if not n:
-            return bytes(out)
+    out.append(n)
 
 
 def _read_varint(raw: bytes, pos: int) -> tuple[int, int]:
@@ -182,70 +182,75 @@ def _unzigzag(n: int) -> int:
     return (n >> 1) ^ -(n & 1)
 
 
-def _ser_event(
-    ts_ms, logtype: str, kinds, encs, dicts, enc: int, prev_ts: int
-) -> tuple[bytes, int]:
-    """One v4 event; returns (bytes, new_prev_ts) — timestamps are
+_HEADER = struct.Struct("<BBH")  # version, encoding, tz_len
+# kind -> (kind, value) packer for the kinds carrying an encoded value;
+# every other kind is a dictionary variable
+_NUM_PACKERS = {
+    ENC_I64: {0: struct.Struct("<Bq"), 1: struct.Struct("<Bq")},
+    ENC_4BYTE: {0: struct.Struct("<Bi"), 1: struct.Struct("<BI")},
+}
+_EVENT_COLS = ("ts_ms", "logtype", "var_kinds", "encoded_vars", "dict_vars")
+# CHUNK_SCHEMA in Arrow types: applyInArrow rejects a result whose column
+# types differ from the declared schema
+_ARROW_TYPES = {"string": pa.string(), "bigint": pa.int64(), "binary": pa.binary()}
+_CHUNK_ARROW_SCHEMA = pa.schema(
+    [(n, _ARROW_TYPES[t]) for n, t in map(str.split, CHUNK_SCHEMA.split(", "))]
+)
+
+
+def _serialize_chunk(tbl: pa.Table, enc: int, tz: str) -> pa.Table:
+    """One (sink, chunk_id) group's Arrow table → its one-row chunk table.
+    Events go out in (conv_id, turn_idx) order; timestamps are
     zigzag-varint DELTAS from the stream's previous timestamped event."""
-    if ts_ms is not None and pd.isna(ts_ms):  # Arrow null → pandas NaN
-        ts_ms = None
-    flags = 0 if ts_ms is None else FLAG_HAS_TS
-    out = [struct.pack("<BB", EVENT_TAG, flags)]
-    if ts_ms is not None:
-        ts_ms = int(ts_ms)
-        out.append(_varint(_zigzag(ts_ms - prev_ts)))
-        prev_ts = ts_ms
-    out.append(_varint(0 if kinds is None else len(kinds)))
-    lt = (logtype or "").encode("utf-8")
-    out.append(_varint(len(lt)))
-    out.append(lt)
-    if kinds is not None:
+    tbl = tbl.sort_by([("conv_id", "ascending"), ("turn_idx", "ascending")])
+    tz_b = (tz or "").encode("utf-8")
+    out = bytearray(_HEADER.pack(VERSION, enc, len(tz_b)))
+    out += tz_b
+    packers = _NUM_PACKERS[enc]
+    prev_ts = 0
+    cols = [tbl.column(c).to_pylist() for c in _EVENT_COLS]
+    for ts_ms, logtype, kinds, encs, dicts in zip(*cols):
+        out.append(EVENT_TAG)
+        if ts_ms is None:
+            out.append(0)
+        else:
+            out.append(FLAG_HAS_TS)
+            _put_varint(out, _zigzag(ts_ms - prev_ts))
+            prev_ts = ts_ms
+        lt = (logtype or "").encode("utf-8")
+        _put_varint(out, len(kinds) if kinds else 0)
+        _put_varint(out, len(lt))
+        out += lt
+        if not kinds:
+            continue
         for k, e, d in zip(kinds, encs, dicts):
-            k = int(k)
-            if k == 0:
-                fmt = "<Bi" if enc == ENC_4BYTE else "<Bq"
-                out.append(struct.pack(fmt, k, int(e)))
-            elif k == 1:
-                fmt = "<BI" if enc == ENC_4BYTE else "<Bq"
-                out.append(struct.pack(fmt, k, int(e)))
+            p = packers.get(k)
+            if p is not None:
+                out += p.pack(k, e)
             else:
                 db = (d or "").encode("utf-8")
-                out.append(struct.pack("<B", k))
-                out.append(_varint(len(db)))
-                out.append(db)
-    return b"".join(out), prev_ts
-
-
-def _serialize_group(pdf: pd.DataFrame, enc: int, tz: str) -> pd.DataFrame:
-    pdf = pdf.sort_values(["conv_id", "turn_idx"])
-    tz_b = (tz or "").encode("utf-8")
-    buf = [struct.pack("<BB", VERSION, enc), struct.pack("<H", len(tz_b)), tz_b]
-    prev_ts = 0
-    for _, r in pdf.iterrows():
-        ev, prev_ts = _ser_event(
-            r["ts_ms"], r["logtype"], r["var_kinds"],
-            r["encoded_vars"], r["dict_vars"], enc, prev_ts,
-        )
-        buf.append(ev)
-    buf.append(struct.pack("<B", EOS))
-    raw = b"".join(buf)
+                out.append(k)
+                _put_varint(out, len(db))
+                out += db
+    out.append(EOS)
+    raw = bytes(out)
     comp = _compress(raw)
-    sink = pdf["sink"].iloc[0]
-    chunk_id = pdf["chunk_id"].iloc[0]
-    ts_valid = pdf["ts_ms"].dropna()
-    first_ts = None if ts_valid.empty else int(ts_valid.min())
-    return pd.DataFrame(
-        {
-            "sink": [sink],
-            "chunk_id": [chunk_id],
-            "n_events": [len(pdf)],
-            "n_bytes_raw": [len(raw)],
-            "n_bytes_compressed": [len(comp)],
-            "first_ts_ms": [first_ts],
-            "object_key": [_object_key(sink, chunk_id, first_ts, comp)],
-            "object_tagging": [f"{S3_TAG_KEY}={sink}"],
-            "ir_zstd": [comp],
-        }
+    sink = tbl.column("sink")[0].as_py()
+    chunk_id = tbl.column("chunk_id")[0].as_py()
+    first_ts = pc.min(tbl.column("ts_ms")).as_py()
+    return pa.Table.from_pylist(
+        [{
+            "sink": sink,
+            "chunk_id": chunk_id,
+            "n_events": tbl.num_rows,
+            "n_bytes_raw": len(raw),
+            "n_bytes_compressed": len(comp),
+            "first_ts_ms": first_ts,
+            "object_key": _object_key(sink, chunk_id, first_ts, comp),
+            "object_tagging": f"{S3_TAG_KEY}={sink}",
+            "ir_zstd": comp,
+        }],
+        schema=_CHUNK_ARROW_SCHEMA,
     )
 
 
@@ -256,30 +261,23 @@ def write_ir_chunks(
 ) -> DataFrame:
     """(sink, chunk_id) groups → one compressed IR-stream blob each.
 
-    ``applyInPandas`` group = one upload object; chunk sizes are bounded by
-    construction (16 MB of payload), so group memory is bounded too.
+    ``applyInArrow`` group = one upload object; chunk sizes are bounded by
+    construction (16 MB of payload), so group memory is bounded too.  The
+    group's Arrow table is sorted by (conv_id, turn_idx) (stable, nulls
+    last) and its columns are walked once as Python lists — no pandas, so
+    ``array<bigint>`` values stay exact ints.
     ``encoding="4byte"`` requires encode columns from mode="4byte".
     ``timezone`` (IANA id, e.g. ``JobConfig.timezone``) is serialized into
     every stream's preamble — the reference's per-stream timezone header
     (`internal/irzstd/disk.go:61`) that lets a consumer recover wall-clock
     rendering from the epoch-millis timestamps.
     """
-    from pyspark.sql import functions as F
-
     enc = _ENC_BY_NAME[encoding]
-    # null-free i64 arrays: Arrow→pandas turns array<bigint>-with-nulls into
-    # float64, corrupting packed values > 2^53.  Dict positions never read
-    # the value (kind tag gates it), so 0 is a safe fill.
-    enc_nn = F.expr("transform(encoded_vars, x -> coalesce(x, 0L))")
-    cols = [
-        "sink", "chunk_id", "conv_id", "turn_idx", "ts_ms",
-        "logtype", "var_kinds", "dict_vars",
-    ]
     return (
-        encoded.select(*cols, enc_nn.alias("encoded_vars"))
+        encoded.select("sink", "chunk_id", "conv_id", "turn_idx", *_EVENT_COLS)
         .groupBy("sink", "chunk_id")
-        .applyInPandas(
-            lambda pdf: _serialize_group(pdf, enc, timezone), CHUNK_SCHEMA
+        .applyInArrow(
+            lambda tbl: _serialize_chunk(tbl, enc, timezone), CHUNK_SCHEMA
         )
     )
 

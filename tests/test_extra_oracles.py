@@ -62,3 +62,22 @@ def test_registry_fits_driver_window():
     qs = list(E.queries())
     assert len(qs) <= 50
     assert set(E.oracle_sql()) <= set(qs)
+
+
+def test_parallel_counts_scan_partitions_once(spark, tmp_path, monkeypatch):
+    """``_parallel`` plans a table's scan once per application; later
+    query builds over the same files reuse the count."""
+    path = str(tmp_path / "one_file.parquet")
+    spark.range(100).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, *df.inputFiles())
+    monkeypatch.delitem(E._SCAN_PARTITIONS, key, raising=False)
+
+    spread = E._parallel(df.select("id"), "id")
+    assert E._SCAN_PARTITIONS[key] == 1
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+    # a cached count at or above the core count means "already parallel"
+    monkeypatch.setitem(E._SCAN_PARTITIONS, key, 10**6)
+    again = spark.read.parquet(path)
+    assert E._parallel(again, "id") is again

@@ -254,3 +254,106 @@ def test_object_tagging_mirrors_reference(spark):
     enc = encode_pipeline(df, spark)
     for c in write_ir_chunks(enc).collect():
         assert c.object_tagging == f"fluentBitTag={c.sink}"
+
+
+_GOLDEN_SCHEMA = (
+    "sink string, chunk_id long, conv_id string, turn_idx int, "
+    "ts_ms long, logtype string, var_kinds array<int>, "
+    "encoded_vars array<long>, dict_vars array<string>"
+)
+
+
+def _golden_rows(i_hi: int, i_lo: int, f_word: int) -> list:
+    """A fixed frame, deliberately out of (conv_id, turn_idx) order, over
+    three (sink, chunk_id) groups: null ts, a negative ts delta, a
+    variable-free row with a null logtype, null arrays, kinds 0/1/2 with a
+    non-ASCII dictionary variable, and ints at the encoding's extremes."""
+    return [
+        ("app", 0, "c1", 2, None, None, [], [], []),
+        ("app", 0, "c1", 1, 1_700_000_000_500, "at \x11 f \x13 u \x12",
+         [0, 1, 2], [i_hi, f_word, None], [None, None, "naïve-Ω€"]),
+        ("app", 0, "c1", 0, 1_700_000_001_000, "lo \x11",
+         [0], [i_lo], [None]),
+        ("app", 0, "c0", 5, 1_700_000_000_000, "x", None, None, None),
+        ("app", 1, "c2", 0, 1_700_000_002_000, "d \x12 \x12",
+         [2, 2], [None, None], ["", "日本"]),
+        ("sys", 3, "c9", 0, -5, "neg \x11", [0], [-1], [None]),
+        ("sys", 3, "c9", 1, -7, "", [], [], []),
+    ]
+
+
+# (encoding, sink, chunk_id) -> (n_events, first_ts_ms, sha256 of the
+# decompressed stream, n_bytes_raw, object_key); any change to the v4
+# wire bytes or the compressed blob breaks these.
+_GOLDEN = {
+    ("i64", "app", 0): (
+        4, 1_700_000_000_000,
+        "961d2ab4598612eb1a1dc24551d445b3d9103198fce39c44aea74ec9d2260cdd",
+        104, "app_0_2023-11-14T22:13:20Z_3be8e754.zst",
+    ),
+    ("i64", "app", 1): (
+        1, 1_700_000_002_000,
+        "354725e48fbd22e689da601fe560cd803bfb3e77b3eb4f3e3623c85c8464be41",
+        45, "app_1_2023-11-14T22:13:22Z_c617d7dd.zst",
+    ),
+    ("i64", "sys", 3): (
+        2, -7,
+        "397376715e590ab441b5d8b877155aff0b8716e9662cd988624c79cde8602e81",
+        44, "sys_3_1969-12-31T23:59:59Z_de6b8a10.zst",
+    ),
+    ("4byte", "app", 0): (
+        4, 1_700_000_000_000,
+        "98623320442ac4fea0b96d68ec1d363667d7d19fcc141341bf38039520fc3458",
+        92, "app_0_2023-11-14T22:13:20Z_9276acfe.zst",
+    ),
+    ("4byte", "app", 1): (
+        1, 1_700_000_002_000,
+        "92de48dd8ae2d635de143197632943386b882b5dba6689fcd79031a54c48de06",
+        45, "app_1_2023-11-14T22:13:22Z_66da31ac.zst",
+    ),
+    ("4byte", "sys", 3): (
+        2, -7,
+        "77de357059b9796c5e9506d84fa62ff183529a7b69697f700922af0ae45120a3",
+        40, "sys_3_1969-12-31T23:59:59Z_d6e897e6.zst",
+    ),
+}
+
+
+def test_ir_v4_byte_golden(spark):
+    """The v4 wire bytes, object keys and per-chunk columns of a fixed
+    frame are pinned under both encodings (the other tests only check
+    decode round-trips, which a symmetric reader/writer change passes)."""
+    import hashlib
+
+    from fluent_bit_clp_spark.operators.irstream import _decompress
+
+    frames = {
+        "i64": _golden_rows(2**63 - 1, -(2**63), 0x3FF8000000000000),
+        "4byte": _golden_rows(2**31 - 1, -(2**31), 0xFFFFFFFF),
+    }
+    got, blobs = {}, {}
+    for mode, rows in frames.items():
+        df = spark.createDataFrame(rows, _GOLDEN_SCHEMA)
+        for c in write_ir_chunks(df, encoding=mode).collect():
+            blobs[mode, c.sink, c.chunk_id] = bytes(c.ir_zstd)
+            raw = _decompress(bytes(c.ir_zstd))
+            assert len(raw) == c.n_bytes_raw
+            assert c.n_bytes_compressed == len(c.ir_zstd)
+            assert c.object_tagging == f"fluentBitTag={c.sink}"
+            got[mode, c.sink, c.chunk_id] = (
+                c.n_events, c.first_ts_ms,
+                hashlib.sha256(raw).hexdigest(), c.n_bytes_raw, c.object_key,
+            )
+    assert got == _GOLDEN
+    evs = read_ir_chunk(blobs["i64", "app", 0])
+    assert [e["ts_ms"] for e in evs] == [
+        1_700_000_000_000, 1_700_000_001_000, 1_700_000_000_500, None,
+    ]
+    assert [e["logtype"] for e in evs] == [
+        "x", "lo \x11", "at \x11 f \x13 u \x12", "",
+    ]
+    assert evs[0]["var_kinds"] == [] and evs[3]["var_kinds"] == []
+    assert evs[1]["encoded_vars"] == [-(2**63)]
+    assert evs[2]["var_kinds"] == [0, 1, 2]
+    assert evs[2]["encoded_vars"][:2] == [2**63 - 1, 0x3FF8000000000000]
+    assert evs[2]["dict_vars"][2] == "naïve-Ω€"
