@@ -1111,18 +1111,19 @@ def q_e1_search_context(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # deliberately MIS-cased vs the corpus (clg --ignore-case analogue, r6):
 # 'GET' stays literal in the logtype, '/api/v2/users/' is a wildcard-
-# adjacent dictionary fragment (digit-bearing) enumerated with (?i)
+# adjacent dictionary fragment (digit-bearing) matched with (?i) against
+# each row's dict_vars
 _IGNORE_CASE_QUERY = "get /API/v2/users/* TOOK * MS"
 
 
 def q_e1_search_ignore_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Case-insensitive search (r6): the full prune stack — (?i) logtype
-    dictionary prune, case-folded variable predicates, (?i) fragment
-    enumeration — then exact (?i) decode-verify; the oracle runs the same
-    (?i) anchored regex over the committed transcripts2000 fixture's raw
-    text.  Case-SENSITIVE search with this query returns zero rows
-    (pinned in tests/test_search.py), so the oracle match proves the
-    folding, not just the plumbing."""
+    dictionary prune, case-folded variable predicates, (?i) per-row
+    fragment predicates over dict_vars — then exact (?i) decode-verify;
+    the oracle runs the same (?i) anchored regex over the committed
+    transcripts2000 fixture's raw text.  Case-SENSITIVE search with this
+    query returns zero rows (pinned in tests/test_search.py), so the
+    oracle match proves the folding, not just the plumbing."""
     from fluent_bit_clp_spark.functions.clp_native import (
         logtype_dictionary,
         var_dictionary,

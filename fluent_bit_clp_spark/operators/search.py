@@ -23,7 +23,13 @@ Plan here (the classic prune + verify):
    variable predicates and the decode (:func:`template_prune`, shared by
    both layouts).  Without a dictionary, or above ``max_templates``
    matches, the pattern itself filters ``logtype``, still before the
-   decode.
+   decode.  In the same Filter, per-variable predicates test each
+   candidate row's own variables: exact values probe ``encoded_vars`` /
+   ``dict_var_ids``, and dictionary-only wildcard fragments run as a
+   regex over the row's ``dict_vars`` strings.  CLP matches those against
+   its variable dictionary because its message table holds only ids;
+   these tables store the strings, so the test is per row and needs no
+   driver collect.
 3. Verify: decode ONLY the pruned candidates and apply the exact wildcard
    regex to the reconstructed text.  Decode cost is confined to candidate
    rows — the pruning is what makes search on 100 TB viable.
@@ -178,7 +184,6 @@ def compile_var_predicates(
     mode: str = MODE_I64,
     ignore_case: bool = False,
     var_dictionary: DataFrame | None = None,
-    max_ids: int = 10_000,
 ) -> list:
     """CLP-style sub-query enumeration, adapted: per-variable predicates.
 
@@ -212,11 +217,11 @@ def compile_var_predicates(
     predicates stay.  A letter-bearing dictionary token's data-side match
     can be any case variant, still necessarily a dictionary variable
     (case folding preserves the digit that made it a variable and the
-    letters that ruled out int/float), so with ``var_dictionary``
-    supplied its id set is enumerated with ``(?i)^token$`` — the CLP
-    sub-query compilation against the variable dictionary, empty set →
-    provably no match; over ``max_ids`` or without a dictionary the
-    token's predicate is skipped (sound: decode-verify follows).
+    letters that ruled out int/float), so it compiles to a per-row test
+    that some ``dict_vars`` element matches ``(?i)^token$``.
+    ``var_dictionary`` only switches that predicate on — its rows are not
+    read; without it the token's predicate is skipped (sound:
+    decode-verify follows).
     """
     from fluent_bit_clp_spark.functions.clp_pandas import _xxh64_str
 
@@ -236,14 +241,8 @@ def compile_var_predicates(
         for k, e, d in zip(kinds or [], encs or [], dicts or []):
             if d is not None:
                 if ignore_case and _HAS_LETTER.search(d):
-                    ids = None if var_dictionary is None else _capped_keys(
-                        var_dictionary,
-                        F.col("var").rlike(f"(?i)^{re.escape(d)}$"),
-                        "var_id",
-                        max_ids,
-                    )
-                    if ids is not None:  # else no source/over cap: skip, sound
-                        preds.append(_in_dict_vars(ids))
+                    if var_dictionary is not None:  # else skip: sound
+                        preds.append(_has_dict_var(f"(?i)^{re.escape(d)}$"))
                 else:
                     preds.append(
                         F.array_contains("dict_var_ids", F.lit(_xxh64_str(d)))
@@ -253,23 +252,11 @@ def compile_var_predicates(
     return preds
 
 
-def _capped_keys(
-    dictionary: DataFrame, where, key: str, cap: int
-) -> list | None:
-    """``key`` of the ``dictionary`` rows matching ``where``, collected on
-    the driver (one job); None when more than ``cap`` rows match."""
-    rows = dictionary.where(where).select(key).limit(cap + 1).collect()
-    return None if len(rows) > cap else [r[0] for r in rows]
-
-
-def _in_dict_vars(ids: list):
-    """The row holds one of the dictionary variables ``ids``."""
-    if not ids:
-        return F.lit(False)
-    return F.arrays_overlap(
-        F.coalesce("dict_var_ids", F.array().cast("array<bigint>")),
-        F.lit(ids).cast("array<bigint>"),
-    )
+def _has_dict_var(pattern: str):
+    """The row holds a dictionary variable matching the regex ``pattern``
+    — evaluated per row over ``dict_vars``; a null or non-matching row
+    gives null/false and the Filter drops it."""
+    return F.exists("dict_vars", lambda v: v.rlike(pattern))
 
 
 def _dict_only_fragment(frag: str) -> bool:
@@ -283,7 +270,6 @@ def _dict_only_fragment(frag: str) -> bool:
 def compile_fragment_var_predicates(
     query: str,
     var_dictionary: DataFrame,
-    max_ids: int = 10_000,
     ignore_case: bool = False,
 ) -> list:
     """CLP-style sub-query enumeration for *wildcard-adjacent fragments*
@@ -292,15 +278,16 @@ def compile_fragment_var_predicates(
     A fragment like ``container-*`` has exactly two interpretations in the
     data (when it contains a non-numeric character, so the encoded-int/
     float classes are impossible): it survives as literal text in the
-    logtype, OR it is (part of) a dictionary variable.  The variable
-    dictionary is searched for the fragment (distributed rlike; only the
-    matching ids are collected, capped at ``max_ids``), giving the
-    disjunctive predicate
+    logtype, OR it is (part of) a dictionary variable.  Both are tested
+    per row, giving the disjunctive predicate
 
-        logtype RLIKE fragment  OR  arrays_overlap(dict_var_ids, S)
+        logtype RLIKE fragment  OR  exists(dict_vars, v -> v RLIKE oriented)
 
     which strictly tightens the relaxed logtype prune — rows whose
     placeholder swallowed a non-matching variable are no longer decoded.
+    ``var_dictionary`` only switches the predicates on; its rows are not
+    read (the row's ``dict_vars`` are exactly the strings the dictionary
+    was built from).
 
     Orientation matters for soundness (the data token can extend over the
     ``*`` side only):
@@ -309,13 +296,10 @@ def compile_fragment_var_predicates(
     - fragment AFTER a ``*``  (``*abc``)  → token ends with it:  ``abc$``
     - fragment between two ``*``          → token contains it:   ``abc``
 
-    An oversized id set (> ``max_ids``) is non-discriminative; the
-    fragment's predicate is skipped (sound — only ever removes true
-    negatives).  Purely numeric fragments are skipped too (the token
-    could be an encoded variable).  ``?`` widens to ``*`` (see
-    :func:`compile_relaxed_pattern`), so a ``?``-adjacent fragment is
-    enumerated with contains/starts/ends orientation exactly like a
-    ``*``-adjacent one.
+    Purely numeric fragments are skipped (the token could be an encoded
+    variable).  ``?`` widens to ``*`` (see :func:`compile_relaxed_pattern`),
+    so a ``?``-adjacent fragment is oriented contains/starts/ends exactly
+    like a ``*``-adjacent one.
     """
     parts = query.replace("?", "*").split("*")
     last = len(parts) - 1
@@ -341,17 +325,12 @@ def compile_fragment_var_predicates(
         if trail:
             frags.append(("^" + re.escape(trail.group(0)), trail.group(0)))
     ci = "(?i)" if ignore_case else ""
-    preds = []
-    for var_pat, frag in frags:
-        if not _dict_only_fragment(frag):
-            continue
-        ids = _capped_keys(
-            var_dictionary, F.col("var").rlike(ci + var_pat), "var_id", max_ids
-        )
-        if ids is not None:
-            literal = F.col("logtype").rlike(ci + re.escape(frag))
-            preds.append(literal | _in_dict_vars(ids))
-    return preds
+    return [
+        F.col("logtype").rlike(ci + re.escape(frag))
+        | _has_dict_var(ci + var_pat)
+        for var_pat, frag in frags
+        if _dict_only_fragment(frag)
+    ]
 
 
 def logtype_matches(pattern: str, dictionary: DataFrame) -> DataFrame:
@@ -378,12 +357,14 @@ def template_prune(
     cap the table comes back unfiltered and the callers' relaxed
     ``logtype`` rlike, also ahead of the decode, prunes instead."""
     wanted = reduce(or_, [F.col("logtype").rlike(p) for p in patterns])
-    keys = _capped_keys(dictionary, wanted, key, max_templates)
-    if keys is None:
+    rows = (
+        dictionary.where(wanted).select(key).limit(max_templates + 1).collect()
+    )
+    if len(rows) > max_templates:
         return table
-    if not keys:
+    if not rows:
         return table.limit(0)
-    return table.where(F.col(column).isin(sorted(set(keys))))
+    return table.where(F.col(column).isin(sorted({r[0] for r in rows})))
 
 
 def search_encoded(
@@ -403,16 +384,18 @@ def search_encoded(
     covering the table) → relaxed logtype pattern → per-variable
     predicates (:func:`compile_var_predicates` — concrete values prune
     on the encoded/dictionary columns, no decode) → wildcard-fragment
-    enumeration against ``var_dictionary`` when supplied
+    predicates when ``var_dictionary`` is supplied
     (:func:`compile_fragment_var_predicates` — the CLP paper's
-    dictionary-compiled sub-queries, tightening fragment queries like
-    ``container-*``) → decode-verify the survivors only (step 3 above).
+    dictionary-compiled sub-queries, run per row over ``dict_vars``,
+    tightening fragment queries like ``container-*``) → decode-verify the
+    survivors only (step 3 above).  ``var_dictionary`` only switches the
+    dictionary-variable predicates on; its rows are not read.
     ``mode`` must be the mode the table was encoded with (i64 default;
     pass "4byte" for FourByteEncoding tables — both the value predicates
     and the decode-verify depend on it).  ``ignore_case`` (clg's
     ``--ignore-case``, r6) makes the whole match case-insensitive — every
     prune stage folds case too (see the compile functions), so pruning
-    power is retained for letter-free values and dictionary-enumerable
+    power is retained for letter-free values and dictionary
     tokens/fragments."""
     pattern = compile_relaxed_pattern(query, ignore_case)
     if dictionary is not None:

@@ -55,7 +55,6 @@ def search(
     from pyspark.sql import functions as F
 
     from fluent_bit_clp_spark.functions.clp_native import clp_decode_column
-    from fluent_bit_clp_spark.operators.dictionary import template_profile
     from fluent_bit_clp_spark.operators.search import (
         search_count_by_time,
         search_with_context,
@@ -84,14 +83,7 @@ def search(
         if time_range is not None:
             lo, hi = time_range
             tbl = tbl.where(F.col("ts_ms").between(F.lit(lo), F.lit(hi)))
-        out = template_profile(tbl, ts_col="ts_ms", example=True, mode=marker_mode)
-        out.write.mode("error").parquet(os.path.join(output_root, "profile"))
-        return {
-            "run_id": run_id,
-            "mode": "profile",
-            "templates": out.count(),
-            "searched": True,
-        }
+        return _write_profile(spark, tbl, marker_mode, output_root, run_id)
     if not queries:
         raise ValueError("at least one --query is required")
     single = next(iter(queries.values())) if len(queries) == 1 else None
@@ -144,23 +136,19 @@ def search(
             rows_in = hits.drop("query_name").dropDuplicates(
                 ["sink", "conv_id", "turn_idx"]
             )
-        out = template_profile(rows_in, ts_col="ts_ms", example=True, mode=mode)
-        out.write.mode("error").parquet(os.path.join(output_root, "profile"))
-        return {
-            "run_id": run_id,
-            "mode": "profile",
-            "templates": out.count(),
-            "searched": True,
-        }
+        return _write_profile(spark, rows_in, mode, output_root, run_id)
     if count_by_time is not None:
         out = search_count_by_time(hits, bucket_ms=count_by_time)
-        out.write.mode("error").parquet(os.path.join(output_root, "counts"))
-        total = out.agg(F.sum("n")).collect()[0][0] or 0
+        buckets, total = (
+            _write_and_read_back(spark, out, os.path.join(output_root, "counts"))
+            .agg(F.count("*"), F.sum("n"))
+            .first()
+        )
         return {
             "run_id": run_id,
             "mode": "count_by_time",
-            "buckets": out.count(),
-            "matches": int(total),
+            "buckets": buckets,
+            "matches": int(total or 0),
             "searched": True,
         }
 
@@ -180,11 +168,38 @@ def search(
         .partitionBy("sink")
         .parquet(os.path.join(output_root, "hits"))
     )
-    written = spark.read.parquet(os.path.join(output_root, "hits"))
+    written = spark.read.schema(rows.schema).parquet(
+        os.path.join(output_root, "hits")
+    )
     return {
         "run_id": run_id,
         "mode": "context" if context is not None else "rows",
         "rows_written": written.count(),
+        "searched": True,
+    }
+
+
+def _write_and_read_back(spark, out, path: str):
+    """Write ``out`` to ``path`` and return the written table, read with
+    ``out``'s schema: the summary numbers come from the stored rows, so
+    the lazy search is not executed again and no schema is inferred."""
+    out.write.mode("error").parquet(path)
+    return spark.read.schema(out.schema).parquet(path)
+
+
+def _write_profile(
+    spark, rows, mode: str, output_root: str, run_id: str
+) -> dict:
+    from fluent_bit_clp_spark.operators.dictionary import template_profile
+
+    out = template_profile(rows, ts_col="ts_ms", example=True, mode=mode)
+    written = _write_and_read_back(
+        spark, out, os.path.join(output_root, "profile")
+    )
+    return {
+        "run_id": run_id,
+        "mode": "profile",
+        "templates": written.count(),
         "searched": True,
     }
 
