@@ -650,8 +650,8 @@ def q_t_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: per-user session assignment with a 30-minute
     inactivity gap (lag + cumulative-sum pattern), per-session stats —
-    the classic log-pipeline windowing op (streaming twin: session_window
-    in streaming/flush.py)."""
+    the classic log-pipeline windowing op (streaming twin: the soft
+    inactivity timer in streaming/dual_timer.py)."""
     from pyspark.sql import Window
 
     ev = _events(spark, sf_dir).select(

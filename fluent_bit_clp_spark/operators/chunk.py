@@ -14,25 +14,35 @@ per-sink upload index (R3), and the same mechanism at 2 MiB yields the IR
 bin id (E3).
 
 Scale design — the naive single window ``PARTITION BY sink`` funnels a
-whole sink through one task (fatal at 10^12 turns).  We therefore compute
-offsets hierarchically:
+whole sink's *rows* through one task (fatal at 10^12 turns).  We therefore
+compute offsets hierarchically:
 
 1. rows → *turn blocks* ``(sink, conv_id, floor(turn_idx/block_turns))``,
    aggregated bytes per block (``groupBy`` — map-side partial agg);
-2. one small window per sink over block summaries (10^5–10^8 summary rows,
-   tunable via ``block_turns``) → block start offsets;
-3. join offsets back (hash join on the block key) + a bounded window
-   *inside* each block (≤ ``block_turns`` rows per partition) → row offsets.
+2. one window per sink over the block summaries → exclusive block start
+   offsets;
+3. join offsets back (broadcast hash join on the block key) + a bounded
+   window *inside* each block (≤ ``block_turns`` rows per partition) →
+   row offsets.
 
-Result is bit-identical to the single-window formulation (property-tested)
-while every stage stays bounded per task.
+Result is bit-identical to the single-window formulation (property-tested,
+one-conversation hot key included).  Step 2 is the one serial part: each
+sink's summary — one row per (conversation, block), so at least one per
+conversation and rows / ``block_turns`` for long conversations — is sorted
+and scanned in one task, buffered in Spark's spillable window buffer, so
+memory stays bounded and the cost is time.  ~10^7 summaries in one sink
+(10^7 conversations, or ~8×10^10 turns at the default 8192) is where that
+task becomes the phase's bottleneck; ``JobConfig.block_turns`` shrinks the
+long-conversation part linearly (and lengthens each step-3 window by the
+same factor).
 
 Single-scan mode (the 100 TB path): any prefix sum needs the per-block
 totals *and* the rows — a diamond dependency.  Left in one lazy plan,
 Catalyst prunes the two branches differently, so the fact table is
 scanned twice (the round-1 plan defect).  :func:`block_offsets` exposes
-the narrow summary branch as its own tiny job: materialize it once
-(scans only the route/size columns), then pass the result back via
+steps 1–2 as their own narrow plan: materialize it once
+(``plans/pipeline.py:write_block_offsets``, one write scanning only the
+route/size columns), then pass the result back via
 ``assign_chunks(..., offsets=...)`` — the main plan then scans the fact
 table exactly once and broadcast-joins the (rows/block_turns)-row offset
 table.  `plans/pipeline.py:run_to_sinks` wires this up.
@@ -58,90 +68,38 @@ def with_row_bytes(df: DataFrame, size_cols: tuple[str, ...] = ("text",)) -> Dat
     return df.withColumn("row_bytes", total.cast("bigint"))
 
 
-# Above this many block summaries in a single sink, one window task
-# sorting the whole sink's summary is itself the bottleneck — switch to the
-# distributed prefix sum (VERDICT r2 #7: auto-pick instead of making the
-# caller know; both paths are bit-identical, property-tested).
-AUTO_DISTRIBUTED_SCAN_BLOCKS = 10_000_000
-
-
-def block_sums(
-    df: DataFrame,
-    block_turns: int = DEFAULT_BLOCK_TURNS,
-    sink_col: str = "sink",
-) -> DataFrame:
-    """Per-block byte totals: ``(sink, conv_id, _block) → _block_bytes``
-    (map-side-combined groupBy — the only pass over the fact rows)."""
-    return (
-        df.withColumn("_block", F.floor(F.col("turn_idx") / F.lit(block_turns)))
-        .groupBy(sink_col, "conv_id", "_block")
-        .agg(F.sum("row_bytes").alias("_block_bytes"))
-    )
-
-
-def max_sink_blocks(blocks: DataFrame, sink_col: str = "sink") -> int:
-    """Largest per-sink block-summary count — the auto-pick signal shared
-    by :func:`block_offsets` and ``pipeline.write_block_offsets`` (one
-    implementation, review fix r3)."""
-    row = (
-        blocks.groupBy(sink_col)
-        .agg(F.count("*").alias("_n"))
-        .agg(F.max("_n"))
-        .first()
-    )
-    return row[0] or 0
-
-
-def offsets_from_sums(
-    blocks: DataFrame,
-    sink_col: str = "sink",
-    distributed_scan: bool = False,
-) -> DataFrame:
-    """Exclusive prefix offsets over a block-sum table (lazy or
-    materialized).  ``distributed_scan=True`` avoids the one-window-task-
-    per-sink sort — required when a single sink's summary outgrows one
-    task (≳10^7 blocks); bit-identical to the window path."""
-    if distributed_scan:
-        return _distributed_prefix_sum(
-            blocks, sink_col, ["conv_id", "_block"], "_block_bytes", "_block_start"
-        ).drop("_block_bytes")
-    w_sink = (
-        Window.partitionBy(sink_col)
-        .orderBy("conv_id", "_block")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return blocks.withColumn(
-        "_block_start",
-        F.coalesce(F.sum("_block_bytes").over(w_sink), F.lit(0)),
-    ).drop("_block_bytes")
-
-
 def block_offsets(
     df: DataFrame,
     block_turns: int = DEFAULT_BLOCK_TURNS,
     sink_col: str = "sink",
-    distributed_scan: bool | None = False,
-    auto_threshold: int = AUTO_DISTRIBUTED_SCAN_BLOCKS,
 ) -> DataFrame:
-    """The narrow summary branch as a standalone plan:
+    """Steps 1–2 of the scale design as a standalone plan:
     ``(sink, conv_id, _block) → _block_start`` (exclusive byte prefix).
 
     Requires ``sink_col, conv_id, turn_idx, row_bytes`` — at scale feed it
     a projection straight off the raw scan (route key + octet_length only;
     see ``pipeline.write_block_offsets``), materialize the tiny result
     (rows/block_turns rows), and pass it to ``assign_chunks(offsets=...)``
-    so the fact table is scanned exactly once.
-
-    ``distributed_scan=None`` auto-picks: it counts the largest sink's
-    block summary (one extra pass over this *narrow* plan — prefer
-    ``pipeline.write_block_offsets``, which decides on the materialized
-    summary for free) and switches to the distributed prefix sum above
-    ``AUTO_DISTRIBUTED_SCAN_BLOCKS``.
+    so the fact table is scanned exactly once.  The per-block groupBy is
+    the only pass over the fact rows; the per-sink window then runs over
+    summaries, one task per sink (see the module docstring for the
+    ``block_turns`` lever).
     """
-    blocks = block_sums(df, block_turns, sink_col)
-    if distributed_scan is None:
-        distributed_scan = max_sink_blocks(blocks, sink_col) > auto_threshold
-    return offsets_from_sums(blocks, sink_col, distributed_scan)
+    w_sink = (
+        Window.partitionBy(sink_col)
+        .orderBy("conv_id", "_block")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return (
+        df.withColumn("_block", F.floor(F.col("turn_idx") / F.lit(block_turns)))
+        .groupBy(sink_col, "conv_id", "_block")
+        .agg(F.sum("row_bytes").alias("_block_bytes"))
+        .withColumn(
+            "_block_start",
+            F.coalesce(F.sum("_block_bytes").over(w_sink), F.lit(0)),
+        )
+        .drop("_block_bytes")
+    )
 
 
 def assign_chunks(
@@ -150,8 +108,6 @@ def assign_chunks(
     bin_bytes: int = IR_BIN_BYTES,
     block_turns: int = DEFAULT_BLOCK_TURNS,
     sink_col: str = "sink",
-    broadcast_offsets: bool = True,
-    distributed_scan: bool = False,
     offsets: DataFrame | None = None,
 ) -> DataFrame:
     """Scalable hierarchical chunk assignment (see module docstring).
@@ -165,11 +121,10 @@ def assign_chunks(
     branch of the same lazy plan, which costs a second (column-pruned)
     pass over the size/route columns — fine interactively, wrong at scale.
 
-    ``broadcast_offsets=True`` broadcasts the block-offset summary (it is
-    input_rows / block_turns rows — tune ``block_turns`` so it stays a few
-    million at most), so the fact side is shuffled exactly **once** (for
-    the intra-block window), not twice (SMJ would add its own exchange).
-    Set False only if the summary outgrows the driver.
+    The block-offset summary is always broadcast (it is input_rows /
+    block_turns rows — tune ``block_turns`` so it stays a few million at
+    most), so the fact side is shuffled exactly **once** (for the
+    intra-block window), not twice (SMJ would add its own exchange).
     """
     df = df.withColumn("_block", F.floor(F.col("turn_idx") / F.lit(block_turns)))
     if offsets is not None:
@@ -186,7 +141,7 @@ def assign_chunks(
             )
         blocks = offsets
     else:
-        blocks = block_offsets(df, block_turns, sink_col, distributed_scan)
+        blocks = block_offsets(df, block_turns, sink_col)
     # LEFT join + loud failure on uncovered rows (ADVICE r2, medium): an
     # inner join against an offsets table built from a different/stale
     # input snapshot would silently DROP fact rows from the committed sink
@@ -195,17 +150,17 @@ def assign_chunks(
     # instead of losing data.  (The block_turns metadata guard above
     # catches the granularity-mismatch case before any compute.)
     # NULL-SAFE equality on every key (review fix r3): a malformed row
-    # with NULL conv_id/turn_idx forms its own group in block_sums, and
+    # with NULL conv_id/turn_idx forms its own group in block_offsets, and
     # plain `=` would never match it back — falsely blaming the offsets
     # table for a row the pipeline elsewhere tolerates (encode_failed).
-    blocks = blocks.select(
-        F.col(sink_col).alias("_b_sink"),
-        F.col("conv_id").alias("_b_conv"),
-        F.col("_block").alias("_b_block"),
-        "_block_start",
+    blocks = F.broadcast(
+        blocks.select(
+            F.col(sink_col).alias("_b_sink"),
+            F.col("conv_id").alias("_b_conv"),
+            F.col("_block").alias("_b_block"),
+            "_block_start",
+        )
     )
-    if broadcast_offsets:
-        blocks = F.broadcast(blocks)
     cond = (
         df[sink_col].eqNullSafe(blocks["_b_sink"])
         & df["conv_id"].eqNullSafe(blocks["_b_conv"])
@@ -240,54 +195,6 @@ def assign_chunks(
     return out.withColumn(
         "chunk_id", F.floor(F.col("byte_start") / F.lit(chunk_bytes))
     ).withColumn("ir_bin_id", F.floor(F.col("byte_start") / F.lit(bin_bytes)))
-
-
-def _distributed_prefix_sum(
-    df: DataFrame,
-    group_col: str,
-    order_cols: list[str],
-    value_col: str,
-    out_col: str,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exclusive prefix sum of ``value_col`` per ``group_col`` under
-    ``order_cols`` order — with NO single-task-per-group window.
-
-    Classic distributed scan: range-partition by the global order, local
-    cumsums in parallel, then a tiny per-partition-totals roll-up (≤ a few
-    hundred rows) provides each partition's base offset.  The result is a
-    pure function of the data ordering — partition boundaries (which vary
-    with parallelism) cancel out, so output is identical at any cluster
-    size (asserted by test_chunk_hierarchical_equals_single_window).
-    """
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(parts, group_col, *order_cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w_local = (
-        Window.partitionBy(group_col, "_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranged = ranged.withColumn(
-        "_local_start", F.coalesce(F.sum(value_col).over(w_local), F.lit(0))
-    )
-    totals = ranged.groupBy(group_col, "_pid").agg(
-        F.sum(value_col).alias("_ptot")
-    )
-    w_tot = (
-        Window.partitionBy(group_col)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.withColumn(
-        "_pstart", F.coalesce(F.sum("_ptot").over(w_tot), F.lit(0))
-    ).select(group_col, "_pid", "_pstart")
-    return (
-        ranged.join(F.broadcast(offsets), [group_col, "_pid"])
-        .withColumn(out_col, F.col("_local_start") + F.col("_pstart"))
-        .drop("_pid", "_local_start")
-    )
 
 
 def assign_chunks_single_window(

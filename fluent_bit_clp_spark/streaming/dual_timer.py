@@ -24,8 +24,7 @@ at time T iff no event arrives at-or-before T.  The same kernel backs:
 - :func:`dual_timer_batches` — batch operator: per-sink
   ``applyInPandas`` simulation (one group per sink mirrors the
   reference's per-tag serial timers; sink cardinality is small by
-  construction — this is the exactness path, the high-throughput
-  soft-timer-only approximation is ``flush.severity_session_flush``);
+  construction);
 - :func:`stream_dual_timer_flush` — Structured Streaming
   ``applyInPandasWithState``: events update the timers, the event-time
   timeout (watermark) fires the flush — a real streaming dual-timer.

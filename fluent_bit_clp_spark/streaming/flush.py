@@ -1,92 +1,21 @@
-"""Structured-Streaming variant: severity-aware flush (SURVEY.md §2.6 T1/T2).
+"""Structured-Streaming sinks: checkpointed encode and overwrite-per-key
+sync (SURVEY.md §2.6, §2.7 K2).
 
-The reference's dual-timer flush manager
-(`/root/reference/plugins/out_clp_s3_v2/internal/flush_manager.go:9-44`):
-- *soft* timer — inactivity: resets on every event, per-level delta;
-- *hard* timer — deadline: set once, only moves **earlier** for higher
-  severity; bounds worst-case latency.
-
-Streaming re-expression:
-- soft  ≈ **session window** with a *dynamic, severity-dependent gap*
-  (``F.session_window(ts, gap_expr)``) — a session closes exactly when no
-  event arrived within the level's soft delta, which is the soft-timer
-  firing condition;
-- hard  ≈ the **watermark** (bounded lateness ⇒ bounded flush latency) +
-  the trigger interval; the earlier-only min-reduce over deltas
-  (flush_manager.go:95-111, A4/A5) appears as ``min(ts + delta)`` inside
-  the session aggregate.
-- per-level delta lookup with default fallback (T2 ``getDeltaSafe``,
-  flush_manager.go:126-143) = ``element_at`` + ``coalesce``.
+- :func:`stream_encode_to_sinks` — ``readStream → CLP encode →
+  partitionBy(sink)`` parquet, exactly-once via the streaming checkpoint;
+- :func:`stream_sync_overwrite` — the v2 plugin's re-PUT-the-same-key sync
+  as a ``foreachBatch`` overwrite per epoch.
 
 The batch engine stays the primary path (deterministic chunking replaces
-timers — north_rule does not score timers); this module is the streaming
-stretch with a real `readStream → session_window → writeStream` plan,
-tested via availableNow triggers in tests/test_streaming.py.
-
-The session-window form approximates the soft timer at full shuffle-free
-throughput; the EXACT dual-timer semantics (earlier-only hard deadline,
-min-soft-delta tracking) live in :mod:`streaming.dual_timer` as both a
-batch operator and an ``applyInPandasWithState`` streaming operator.
+timers).  The reference's severity-aware dual-timer flush
+(`plugins/out_clp_s3_v2/internal/flush_manager.go:9-44`) lives, exact,
+in :mod:`streaming.dual_timer`, which drives :func:`stream_sync_overwrite`
+with its flush decisions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-# Default 3 s soft/hard for every level (internal/context.go:17-22).
-DEFAULT_DELTAS_S = [3, 3, 3, 3, 3, 3]
-FALLBACK_DELTA_S = 1  # flush_manager.go:140-142 hardcoded last resort
-
-
-def delta_for_level(
-    deltas_s: list[int] | None = None,
-    level_col: str = "level_id",
-    default_level: int = 2,
-) -> Column:
-    """T2 getDeltaSafe: level→delta with default-level then 1 s fallback."""
-    deltas = deltas_s or DEFAULT_DELTAS_S
-    arr = "array({})".format(",".join(str(d) for d in deltas))
-    return F.expr(
-        f"coalesce(try_element_at({arr}, {level_col} + 1), "
-        f"try_element_at({arr}, {default_level} + 1), {FALLBACK_DELTA_S})"
-    )
-
-
-def severity_session_flush(
-    events: DataFrame,
-    deltas_s: list[int] | None = None,
-    watermark: str = "30 seconds",
-) -> DataFrame:
-    """events(ts, sink, level_id, text) → one row per flushed session.
-
-    Each output row is an "upload": the batch of events that accumulated on
-    a sink until its (severity-dependent) soft gap expired — the streaming
-    analogue of the timer callback's zstd-flush+PUT
-    (internal/ingestion.go:110-127).
-    """
-    gap = F.concat(delta_for_level(deltas_s).cast("string"), F.lit(" seconds"))
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "sink")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.octet_length("text")).alias("n_bytes"),
-            F.max("level_id").alias("max_level"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-        .select(
-            "sink",
-            F.col("session_window.start").alias("flush_open"),
-            F.col("session_window.end").alias("flush_close"),
-            "n_events",
-            "n_bytes",
-            "max_level",
-            "first_ts",
-            "last_ts",
-        )
-    )
+from pyspark.sql import DataFrame
 
 
 def stream_encode_to_sinks(

@@ -9,7 +9,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from fluent_bit_clp_spark.streaming.dual_timer import (
+    FALLBACK_DELTA_MS,
     _TimerState,
+    delta_ms,
     dual_timer_batches,
     simulate,
     stream_dual_timer_flush,
@@ -91,6 +93,16 @@ def test_min_soft_delta_tracked_across_batch():
     rows = _run([(0, 1, 1), (50, 0, 1)], soft, hard)
     # second event resets soft with min(10000, 100) = 100 → fires at 150
     assert rows[0][2] == 150
+
+
+def test_delta_ms_get_delta_safe_fallbacks():
+    """getDeltaSafe (flush_manager.go:126-143): the level's own delta,
+    else the default level's, else the hard-coded 1 s."""
+    deltas = [1, 2, 3, 4, 5]
+    assert delta_ms(0, deltas) == 1 and delta_ms(4, deltas) == 5
+    assert delta_ms(99, deltas, default_level=2) == 3
+    assert delta_ms(-1, deltas, default_level=2) == 3
+    assert delta_ms(99, deltas, default_level=7) == FALLBACK_DELTA_MS == 1000
 
 
 def test_batch_operator_matches_kernel(spark):

@@ -95,25 +95,76 @@ def test_ts_null_counts_as_encode_failure(spark, encoded):
     assert encoded.where(F.col("ts").isNull()).select("ts_ms").collect()[0].ts_ms is None
 
 
-def test_chunk_hierarchical_equals_single_window(spark, encoded):
+def _chunk_frame(df):
+    cols = ["sink", "conv_id", "turn_idx", "byte_start", "chunk_id", "ir_bin_id"]
+    return (
+        df.select(cols).toPandas()
+        .sort_values(cols[:3]).reset_index(drop=True)
+    )
+
+
+def _one_conversation(spark, turns):
+    """One hot key: a single conversation of ``turns`` user turns (one
+    sink), text lengths varying so chunk and bin boundaries move."""
+    return spark.range(turns).select(
+        F.lit("hot").alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        F.lit("user").alias("role"),
+        F.lit(None).cast("string").alias("tool"),
+        F.concat(
+            F.lit("turn "), F.col("id").cast("string"), F.lit(" "),
+            F.expr("repeat('x', cast(id % 97 as int))"),
+        ).alias("text"),
+    )
+
+
+def test_chunk_hierarchical_equals_single_window(spark, tmp_path, tiny):
     """The scalable two-level chunk assignment is bit-identical to the
-    reference single-window formulation."""
-    base = encoded.select("sink", "conv_id", "turn_idx", "row_bytes")
-    a = (
-        assign_chunks(base, chunk_bytes=4096, bin_bytes=1024, block_turns=7)
-        .select("sink", "conv_id", "turn_idx", "byte_start", "chunk_id", "ir_bin_id")
-        .toPandas()
-        .sort_values(["sink", "conv_id", "turn_idx"])
-        .reset_index(drop=True)
+    reference single-window formulation — through the in-plan summary
+    branch and through the materialized offsets of the production path —
+    on the generated corpus and on one conversation spanning ≥ 50 blocks."""
+    from fluent_bit_clp_spark.plans.pipeline import (
+        narrow_route_plan,
+        write_block_offsets,
     )
-    b = (
-        assign_chunks_single_window(base, chunk_bytes=4096, bin_bytes=1024)
-        .select("sink", "conv_id", "turn_idx", "byte_start", "chunk_id", "ir_bin_id")
-        .toPandas()
-        .sort_values(["sink", "conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    assert a.equals(b)
+
+    hot = _one_conversation(spark, 400)
+    for name, raw in (("generated", tiny), ("hot", hot)):
+        base = narrow_route_plan(raw)
+        offs = write_block_offsets(spark, raw, str(tmp_path / name), block_turns=7)
+        if name == "hot":
+            assert offs.select("sink").distinct().count() == 1
+            assert offs.count() >= 50
+        want = _chunk_frame(
+            assign_chunks_single_window(base, chunk_bytes=4096, bin_bytes=1024)
+        )
+        for offsets in (None, offs):
+            got = _chunk_frame(
+                assign_chunks(base, chunk_bytes=4096, bin_bytes=1024,
+                              block_turns=7, offsets=offsets)
+            )
+            assert got.equals(want), (name, offsets is not None)
+
+
+def test_write_block_offsets_starts_at_most_three_jobs(spark, tmp_path, tiny):
+    """The offsets phase is one write: the block-sum exchange, the
+    per-sink window exchange and the write job — no staged sums table,
+    no size probe, no schema inference on the read-back."""
+    from fluent_bit_clp_spark.plans.pipeline import write_block_offsets
+
+    src = str(tmp_path / "src")
+    tiny.write.mode("overwrite").parquet(src)
+    df = spark.read.parquet(src)
+    sc = spark.sparkContext
+    group = "offsets-job-pin"
+    sc.setJobGroup(group, group)
+    try:
+        write_block_offsets(spark, df, str(tmp_path / "offs"), block_turns=7)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert not os.path.exists(str(tmp_path / "offs_sums"))
 
 
 def test_chunk_monotone_and_bounded(encoded):
@@ -187,24 +238,6 @@ def test_sink_metrics_shape(spark, tmp_path, tiny):
     total = m.agg(F.sum("rows_parsed")).collect()[0][0]
     assert total == tiny.count()
     assert m.agg(F.sum("encode_failures")).collect()[0][0] >= 1
-
-
-def test_chunk_distributed_scan_equivalence(spark, encoded):
-    """The fully-parallel prefix-sum variant is bit-identical to the
-    summary-window one (and thus to the single-window reference)."""
-    base = encoded.select("sink", "conv_id", "turn_idx", "row_bytes")
-    a = (
-        assign_chunks(base, chunk_bytes=4096, bin_bytes=1024, block_turns=7,
-                      distributed_scan=True)
-        .select("sink", "conv_id", "turn_idx", "byte_start")
-        .toPandas().sort_values(["sink", "conv_id", "turn_idx"]).reset_index(drop=True)
-    )
-    b = (
-        assign_chunks(base, chunk_bytes=4096, bin_bytes=1024, block_turns=7)
-        .select("sink", "conv_id", "turn_idx", "byte_start")
-        .toPandas().sort_values(["sink", "conv_id", "turn_idx"]).reset_index(drop=True)
-    )
-    assert a.equals(b)
 
 
 def test_materialized_offsets_single_scan_equivalence(spark, tmp_path, tiny):
@@ -399,29 +432,30 @@ def test_null_key_rows_survive_offsets_join(spark, tmp_path):
     ).first()[0] is not None
 
 
-def test_write_block_offsets_auto_distributed(spark, tmp_path, tiny):
-    """VERDICT r2 #7: distributed_scan=None auto-picks from the
-    materialized summary size; forced-distributed output is bit-identical
-    to the windowed default."""
-    from fluent_bit_clp_spark.plans.pipeline import write_block_offsets
+@pytest.mark.parametrize("layout", ["working", "archive"])
+def test_empty_input_commits_zero_counters(spark, tmp_path, tiny, layout):
+    """A zero-row input commits: the ingest counters are 0 (a sum over no
+    rows is null), no sink is written, a search finds nothing, and the
+    offsets table reads back empty with its stamped schema."""
+    from fluent_bit_clp_spark.plans.pipeline import (
+        search_run,
+        write_block_offsets,
+    )
+    from fluent_bit_clp_spark.sources.tables import JobConfig
 
-    src = str(tmp_path / "src4")
-    tiny.write.mode("overwrite").parquet(src)
-    df = spark.read.parquet(src)
-    cols = ["sink", "conv_id", "_block", "_block_start"]
-    # auto with a 1-block threshold → takes the distributed path
-    a = (
-        write_block_offsets(spark, df, str(tmp_path / "o4a"), block_turns=7,
-                            auto_threshold=1)
-        .select(cols).toPandas().sort_values(cols[:3]).reset_index(drop=True)
-    )
-    # auto with the default (huge) threshold → takes the window path
-    b = (
-        write_block_offsets(spark, df, str(tmp_path / "o4b"), block_turns=7)
-        .select(cols).toPandas().sort_values(cols[:3]).reset_index(drop=True)
-    )
-    assert a.equals(b)
-    assert len(a) > 1
+    empty = spark.createDataFrame([], tiny.schema)
+    out = str(tmp_path / "empty")
+    res = run_to_sinks(spark, empty, out, "run-0", emit_ir_chunks=True,
+                       cfg=JobConfig(sink_layout=layout))
+    ing = res["ingest"]
+    assert (ing["num_events"], ing["num_bytes"], ing["encode_failures"]) == (0, 0, 0)
+    assert res["sinks"] == []
+    assert search_run(spark, out, "Task * started*", "run-0").count() == 0
+    offs = write_block_offsets(spark, empty, str(tmp_path / "offs"), block_turns=7)
+    assert offs.count() == 0
+    stamped = {f.name: f.metadata for f in offs.schema.fields}
+    assert list(stamped) == ["sink", "conv_id", "_block", "_block_start"]
+    assert stamped["_block_start"] == {"block_turns": 7}
 
 
 def test_run_to_sinks_4byte_mode(spark, tmp_path, tiny):

@@ -1,4 +1,4 @@
-"""Sources (JSONL decoder path, config validation) + streaming flush tests."""
+"""Sources (JSONL decoder path, config validation) + streaming encode test."""
 
 import json
 import os
@@ -17,11 +17,7 @@ from fluent_bit_clp_spark.sources.tables import (
     load_transcripts,
     read_jsonl_records,
 )
-from fluent_bit_clp_spark.streaming.flush import (
-    delta_for_level,
-    severity_session_flush,
-    stream_encode_to_sinks,
-)
+from fluent_bit_clp_spark.streaming.flush import stream_encode_to_sinks
 
 
 @pytest.fixture()
@@ -92,35 +88,6 @@ def test_load_transcripts_schema_check(spark, tmp_path):
     spark.range(3).write.parquet(str(tmp_path / "bad"))
     with pytest.raises(ValueError, match="missing columns"):
         load_transcripts(spark, str(tmp_path / "bad"))
-
-
-def test_delta_for_level(spark):
-    df = spark.createDataFrame(
-        [(0,), (5,), (99,), (None,)], "level_id int"
-    ).withColumn("d", delta_for_level([1, 2, 3, 4, 5, 6]))
-    got = {r.level_id: r.d for r in df.collect()}
-    assert got[0] == 1 and got[5] == 6
-    assert got[99] == 3  # out of range → default level (info=2) → 3
-    assert got[None] == 3
-
-
-def test_severity_session_flush_batch_semantics(spark):
-    """Session-window semantics verified on a bounded frame (same operator
-    works under a stream; availableNow covered in the next test)."""
-    rows = [
-        ("ops", 2, "a 1", "2026-01-01 00:00:00"),
-        ("ops", 2, "b 2", "2026-01-01 00:00:02"),   # within 3s gap → same session
-        ("ops", 2, "c 3", "2026-01-01 00:00:10"),   # gap > 3s → new session
-        ("web", 4, "d 4", "2026-01-01 00:00:00"),
-    ]
-    df = spark.createDataFrame(
-        rows, "sink string, level_id int, text string, ts_s string"
-    ).withColumn("ts", F.to_timestamp("ts_s"))
-    out = severity_session_flush(df).collect()
-    ops = sorted([r for r in out if r.sink == "ops"], key=lambda r: r.flush_open)
-    assert len(ops) == 2
-    assert ops[0].n_events == 2 and ops[1].n_events == 1
-    assert len([r for r in out if r.sink == "web"]) == 1
 
 
 def test_stream_encode_availablenow(spark, tmp_path):
