@@ -409,16 +409,6 @@ def _tok_cache_miss(tok: str, fourbyte: bool, cache: dict):
     return info
 
 
-def _tok_info(tok: str, fourbyte: bool):
-    """Per-token entry point kept for the scalar paths (_encode_one twin
-    tests); batch paths inline the cache lookup instead."""
-    cache = _TOK_CACHE[1 if fourbyte else 0]
-    info = cache.get(tok)
-    if info is not None:
-        return info
-    return _tok_cache_miss(tok, fourbyte, cache)
-
-
 # Plain-dict id cache for the batch encoder: an lru_cache HIT costs ~1.5 µs
 # of C-wrapper overhead per call, which at ~5 ids/row was the profiled #1
 # encode cost after round 5 — a dict .get() is ~20× cheaper, and the

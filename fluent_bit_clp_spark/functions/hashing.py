@@ -46,15 +46,6 @@ def portable_hash_sql(expr: str, seed: int = 0) -> str:
     return f"('0x' || substring(md5('s{seed}:' || {expr}), 1, 15))::bigint"
 
 
-def portable_hash_spark_sql(expr: str, seed: int = 0) -> str:
-    """Spark-SQL-string twin (for use inside ``F.expr`` lambdas where a
-    Column can't be composed, e.g. transform() over array elements)."""
-    return (
-        f"cast(conv(substring(md5(concat('s{seed}:', {expr})), 1, 15), 16, 10) "
-        f"as bigint)"
-    )
-
-
 def py_portable_hash64(s: str, seed: int = 0) -> int:
     """Driver-side twin — constants baked into plans (LSH hyperplanes)."""
     h = hashlib.md5(f"s{seed}:{s}".encode("utf-8")).hexdigest()

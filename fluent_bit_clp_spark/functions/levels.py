@@ -33,8 +33,6 @@ LOG_LEVEL_ALIASES: dict[str, int] = {
     "wtf": LEVEL_FATAL, "fatal": LEVEL_FATAL, "FATAL": LEVEL_FATAL,
 }
 
-LEVEL_NAMES = ["trace", "debug", "info", "warn", "error", "fatal"]
-
 # Role / tool lookup tables (FIXTURES.md §2) — the north_rule's
 # broadcast-join enrichment dims.
 ROLE_LOOKUP = [

@@ -106,19 +106,6 @@ def extend_dense_ids(
     return existing.select(key_col, id_col).unionByName(appended)
 
 
-def compact_var_dict(encoded: DataFrame, zones: int = DEFAULT_ZONES) -> DataFrame:
-    """Offline dense remap for the dictionary-variable dictionary."""
-    v = (
-        encoded.select(F.explode("dict_vars").alias("var"))
-        .where(F.col("var").isNotNull())
-        .distinct()
-    )
-    ranked = dense_ids(v, "var", zones=zones)
-    return ranked.select(
-        F.xxhash64("var").alias("var_id"), "var", "dense_id"
-    )
-
-
 def template_profile(
     encoded: DataFrame,
     ts_col: str | None = None,

@@ -183,7 +183,7 @@ def compile_var_predicates(
     query: str,
     mode: str = MODE_I64,
     ignore_case: bool = False,
-    var_dictionary: DataFrame | None = None,
+    var_dictionary: DataFrame | bool | None = None,
 ) -> list:
     """CLP-style sub-query enumeration, adapted: per-variable predicates.
 
@@ -219,9 +219,9 @@ def compile_var_predicates(
     (case folding preserves the digit that made it a variable and the
     letters that ruled out int/float), so it compiles to a per-row test
     that some ``dict_vars`` element matches ``(?i)^token$``.
-    ``var_dictionary`` only switches that predicate on — its rows are not
-    read; without it the token's predicate is skipped (sound:
-    decode-verify follows).
+    ``var_dictionary`` only switches that predicate on (``True``, or a
+    variable-dictionary frame whose rows are not read); without it the
+    token's predicate is skipped (sound: decode-verify follows).
     """
     from fluent_bit_clp_spark.functions.clp_pandas import _xxh64_str
 
@@ -241,7 +241,7 @@ def compile_var_predicates(
         for k, e, d in zip(kinds or [], encs or [], dicts or []):
             if d is not None:
                 if ignore_case and _HAS_LETTER.search(d):
-                    if var_dictionary is not None:  # else skip: sound
+                    if var_dictionary:  # else skip: sound
                         preds.append(_has_dict_var(f"(?i)^{re.escape(d)}$"))
                 else:
                     preds.append(
@@ -269,7 +269,7 @@ def _dict_only_fragment(frag: str) -> bool:
 
 def compile_fragment_var_predicates(
     query: str,
-    var_dictionary: DataFrame,
+    var_dictionary: DataFrame | bool,
     ignore_case: bool = False,
 ) -> list:
     """CLP-style sub-query enumeration for *wildcard-adjacent fragments*
@@ -285,9 +285,9 @@ def compile_fragment_var_predicates(
 
     which strictly tightens the relaxed logtype prune — rows whose
     placeholder swallowed a non-matching variable are no longer decoded.
-    ``var_dictionary`` only switches the predicates on; its rows are not
-    read (the row's ``dict_vars`` are exactly the strings the dictionary
-    was built from).
+    ``var_dictionary`` is not read (``True`` suffices): the row's
+    ``dict_vars`` are exactly the strings a variable dictionary would be
+    built from.
 
     Orientation matters for soundness (the data token can extend over the
     ``*`` side only):
@@ -372,7 +372,7 @@ def search_encoded(
     query: str,
     dictionary: DataFrame | None = None,
     mode: str = MODE_I64,
-    var_dictionary: DataFrame | None = None,
+    var_dictionary: DataFrame | bool | None = None,
     ignore_case: bool = False,
     max_templates: int = 1024,
 ) -> DataFrame:
@@ -389,7 +389,8 @@ def search_encoded(
     dictionary-compiled sub-queries, run per row over ``dict_vars``,
     tightening fragment queries like ``container-*``) → decode-verify the
     survivors only (step 3 above).  ``var_dictionary`` only switches the
-    dictionary-variable predicates on; its rows are not read.
+    dictionary-variable predicates on: pass ``True`` (what ``search_run``
+    does) or any frame — its rows are not read.
     ``mode`` must be the mode the table was encoded with (i64 default;
     pass "4byte" for FourByteEncoding tables — both the value predicates
     and the decode-verify depend on it).  ``ignore_case`` (clg's
@@ -408,7 +409,7 @@ def search_encoded(
         query, mode, ignore_case, var_dictionary
     ):
         cand = cand.where(pred)
-    if var_dictionary is not None:
+    if var_dictionary:
         for pred in compile_fragment_var_predicates(
             query, var_dictionary, ignore_case=ignore_case
         ):
@@ -424,7 +425,7 @@ def search_encoded_multi(
     queries: dict[str, str],
     dictionary: DataFrame | None = None,
     mode: str = MODE_I64,
-    var_dictionary: DataFrame | None = None,
+    var_dictionary: DataFrame | bool | None = None,
     ignore_case: bool = False,
     max_templates: int = 1024,
 ) -> DataFrame:
@@ -452,7 +453,7 @@ def search_encoded_multi(
     for name, q in queries.items():
         patterns[name] = compile_relaxed_pattern(q, ignore_case)
         preds = compile_var_predicates(q, mode, ignore_case, var_dictionary)
-        if var_dictionary is not None:
+        if var_dictionary:
             preds += compile_fragment_var_predicates(
                 q, var_dictionary, ignore_case=ignore_case
             )
@@ -497,7 +498,7 @@ def search_with_context(
     order_col: str = "turn_idx",
     dictionary: DataFrame | None = None,
     mode: str = MODE_I64,
-    var_dictionary: DataFrame | None = None,
+    var_dictionary: DataFrame | bool | None = None,
     ignore_case: bool = False,
     broadcast_hits: bool = True,
 ) -> DataFrame:
@@ -653,7 +654,7 @@ def search_stored_archive(
     query: str,
     archive_dictionary: DataFrame,
     mode: str = MODE_I64,
-    var_dictionary: DataFrame | None = None,
+    var_dictionary: DataFrame | bool | None = None,
     max_templates: int = 1024,
     verify_coverage: bool = False,
     time_range: tuple[int, int] | None = None,
@@ -766,7 +767,7 @@ def search_stored_archive_multi(
     queries: dict[str, str],
     archive_dictionary: DataFrame,
     mode: str = MODE_I64,
-    var_dictionary: DataFrame | None = None,
+    var_dictionary: DataFrame | bool | None = None,
     max_templates: int = 1024,
     verify_coverage: bool = False,
     time_range: tuple[int, int] | None = None,

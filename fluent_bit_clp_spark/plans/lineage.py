@@ -31,10 +31,6 @@ def manifest_path(out_dir: str, run_id: str, sink: str) -> str:
     return os.path.join(out_dir, "_lineage", run_id, f"{sink}.json")
 
 
-def is_committed(out_dir: str, run_id: str, sink: str) -> bool:
-    return os.path.exists(manifest_path(out_dir, run_id, sink))
-
-
 def commit_manifest(out_dir: str, run_id: str, sink: str, payload: dict) -> None:
     """Atomic manifest write: tmp file + rename (the commit point)."""
     path = manifest_path(out_dir, run_id, sink)

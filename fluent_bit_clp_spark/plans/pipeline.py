@@ -18,9 +18,11 @@ Scale shape (round-2 fix of the double-scan defect):
    join the materialized offsets → bounded intra-block window → Arrow
    CLP-encode → a single ``partitionBy(sink)`` write.  No ``.cache()`` of
    the encoded table, no per-sink actions.
-3. **Dictionaries + metrics** — derived from the *written* columnar
-   output with column-pruned read-backs (logtype/dict_vars columns only),
-   never by re-running the encode.
+3. **Metrics + one template dictionary** — column-pruned read-backs of
+   the *written* output, never a re-run of the encode: ``sink_metrics``
+   (its tiny read-back gives the manifest counts), then ``logtype_dict``
+   (working) or ``archive_logtype_dict`` (archive).  No variable
+   dictionary: search tests each row's ``dict_vars`` strings.
 
 Entry points:
 - :func:`encode_pipeline`   — the lazy DataFrame (for queries/benchmarks);
@@ -90,7 +92,6 @@ SINKS_SCHEMAS = {
 ARCHIVE_DICT_DIR = "archive_logtype_dict"
 DICT_SCHEMAS = {
     "logtype_dict": "logtype_id bigint, logtype string",
-    "var_dict": "var_id bigint, var string",
     ARCHIVE_DICT_DIR: "logtype_stored string, logtype string, logtype_id bigint",
 }
 
@@ -102,6 +103,19 @@ def read_committed(
     of :data:`DICT_SCHEMAS`) read with its fixed schema."""
     schema = SINKS_SCHEMAS[layout] if table == "sinks" else DICT_SCHEMAS[table]
     return spark.read.schema(schema).parquet(os.path.join(out_dir, table))
+
+
+def read_template_dictionary(
+    spark: SparkSession, out_dir: str, layout: str = "working"
+) -> DataFrame:
+    """The run's ``(logtype_id, logtype)`` template dictionary: a working
+    run's ``logtype_dict``, or the projection of an archive run's
+    ``archive_logtype_dict`` (its only template dictionary)."""
+    if layout == "archive":
+        return read_committed(spark, out_dir, ARCHIVE_DICT_DIR).select(
+            "logtype_id", "logtype"
+        )
+    return read_committed(spark, out_dir, "logtype_dict")
 
 
 def parse_normalize(df: DataFrame) -> DataFrame:
@@ -216,12 +230,14 @@ def run_to_sinks(
     fail_after_sinks: int | None = None,
     emit_ir_chunks: bool = False,
 ) -> dict:
-    """Materialize per-sink IR-stream tables + dictionaries + metrics.
+    """Materialize per-sink IR-stream tables + metrics + the template
+    dictionary.
 
     One ``partitionBy(sink)`` write commits every sink's data atomically
     (Spark's output-commit protocol), mirroring the reference's per-tag
     uploads (R1/K1) without per-sink passes; per-sink manifests are then
-    committed from the written output so a crash mid-commit resumes
+    committed from the ``sink_metrics`` written from that output (their
+    row counts sum its ``rows_parsed``) so a crash mid-commit resumes
     exactly (T4) — re-running with the same ``run_id`` skips both the data
     write and already-committed manifests.  ``fail_after_sinks`` is a test
     hook for the kill-and-resume property.
@@ -320,22 +336,19 @@ def run_to_sinks(
             "sink_layout": sink_layout,
         }
         lineage.mark_data_committed(out_dir, run_id, ingest)
-    # Phase 2: per-sink manifests from the committed output (narrow read).
-    # written_tbl is the on-disk layout (counts/metrics/var-dict are
-    # layout-agnostic: compact dict_vars carries the same non-null set);
-    # consume_tbl is the working-layout view — Catalyst prunes the
-    # from_archive reconstruction down to whatever each reader touches.
+    # Phase 2: sink_metrics from the on-disk layout (layout-agnostic:
+    # compact dict_vars carries the same non-null set), then per-sink
+    # manifests whose row counts sum its tiny read-back (<= sinks x 64 rows).
     written_tbl = read_committed(spark, out_dir, "sinks", sink_layout)
-    if sink_layout == "archive":
-        from fluent_bit_clp_spark.operators.archive import from_archive
-
-        consume_tbl = from_archive(written_tbl)
-    else:
-        consume_tbl = written_tbl
-    counts = {
-        r["sink"]: r["n"]
-        for r in written_tbl.groupBy("sink").agg(F.count("*").alias("n")).collect()
-    }
+    metrics = lineage.sink_metrics(written_tbl, run_id)
+    metrics_path = os.path.join(out_dir, "sink_metrics")
+    metrics.write.mode("overwrite").parquet(metrics_path)
+    counts: dict[str, int] = {}
+    for sink, n in (
+        spark.read.schema(metrics.schema).parquet(metrics_path)
+        .select("sink", "rows_parsed").collect()
+    ):
+        counts[sink] = counts.get(sink, 0) + n
     written = 0
     for sink in sorted(counts):
         if sink in done:
@@ -352,11 +365,9 @@ def run_to_sinks(
         written += 1
         if fail_after_sinks is not None and written >= fail_after_sinks:
             raise RuntimeError(f"injected failure after {written} sinks")
-    # Phase 3: dictionaries + metrics — column-pruned read-backs of the
-    # written parquet (hash IDs: stable across partitions/resume).
-    consume_tbl.select("logtype_id", "logtype").distinct().write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "logtype_dict"))
+    # Phase 3: the layout's one template dictionary — a column-pruned
+    # read-back of the written parquet (hash IDs: stable across
+    # partitions/resume).
     if sink_layout == "archive":
         # VERDICT r5 #4: persist the stored-template dictionary BESIDE
         # the sinks so a search session reads it instead of re-running a
@@ -367,17 +378,10 @@ def run_to_sinks(
         # overwrite its own input); on Iceberg this is one overwrite
         # snapshot commit.
         _persist_archive_dictionary(spark, written_tbl, out_dir)
-    (
-        written_tbl.select(F.explode("dict_vars").alias("var"))
-        .where(F.col("var").isNotNull())
-        .distinct()
-        .select(F.xxhash64("var").alias("var_id"), "var")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "var_dict"))
-    )
-    lineage.sink_metrics(written_tbl, run_id).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "sink_metrics")
-    )
+    else:
+        written_tbl.select("logtype_id", "logtype").distinct().write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_dir, "logtype_dict"))
     if emit_ir_chunks:
         # The reference's actual output objects (per-chunk compressed IR
         # streams, `<tag>_<index>_...zst`) — derived from the committed
@@ -390,6 +394,13 @@ def run_to_sinks(
 
         tz = cfg.timezone if cfg is not None else DEFAULT_TIMEZONE
         mode = ingest.get("encoding_mode", "i64")
+        # the working-layout view: Catalyst prunes the from_archive
+        # reconstruction down to the columns the serializer reads
+        consume_tbl = written_tbl
+        if sink_layout == "archive":
+            from fluent_bit_clp_spark.operators.archive import from_archive
+
+            consume_tbl = from_archive(written_tbl)
         write_ir_chunks(consume_tbl, encoding=mode, timezone=tz).write.mode(
             "overwrite"
         ).parquet(os.path.join(out_dir, "ir_chunks"))
@@ -452,10 +463,12 @@ def search_run(
     ignore_case: bool = False,
 ) -> DataFrame:
     """Search a COMMITTED run in one call — the ``clg <archives> query``
-    UX: layout comes from the data marker, the prune dictionaries are the
-    run's PERSISTED ones (written by phase 3 / extended cross-run for
-    archives), read with their fixed schemas; nothing is recomputed or
-    inferred per search.
+    UX: layout comes from the data marker, the prune dictionary is the
+    run's PERSISTED template dictionary (written by phase 3 / extended
+    cross-run for archives), read with its fixed schema; nothing is
+    recomputed or inferred per search.  The dictionary-variable
+    predicates test each row's ``dict_vars``, so no variable dictionary
+    is read (a ``var_dict`` left by an older run is ignored).
 
     ``query`` is a CLP wildcard string, or a ``{name: wildcard}`` dict
     for the one-scan multi-query path (result carries ``query_name``).
@@ -478,11 +491,7 @@ def search_run(
     if sink is not None:
         tbl = tbl.where(F.col("sink") == sink)
     multi = isinstance(query, dict)
-    kw = dict(
-        mode=mode,
-        var_dictionary=read_committed(spark, out_dir, "var_dict"),
-        ignore_case=ignore_case,
-    )
+    kw = dict(mode=mode, var_dictionary=True, ignore_case=ignore_case)
     if layout == "archive":
         fn = search_stored_archive_multi if multi else search_stored_archive
         adict = read_committed(spark, out_dir, ARCHIVE_DICT_DIR)
@@ -491,7 +500,7 @@ def search_run(
         lo, hi = time_range
         tbl = tbl.where(F.col("ts_ms").between(F.lit(lo), F.lit(hi)))
     fn = search_encoded_multi if multi else search_encoded
-    return fn(tbl, query, read_committed(spark, out_dir, "logtype_dict"), **kw)
+    return fn(tbl, query, read_template_dictionary(spark, out_dir), **kw)
 
 
 def load_sinks(

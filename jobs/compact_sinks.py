@@ -28,7 +28,9 @@ def copy_sidecars(input_root: str, output_root: str) -> None:
     - ``archive_logtype_dict`` travels verbatim: clustering reorders rows
       but never changes the template set, so search_stored_archive stays
       readable against the new root without a rebuild pass
-      (plans/pipeline.py maintains it at write time).
+      (plans/pipeline.py maintains it at write time).  It is the only
+      dictionary a search of an archive root needs: ``search_run`` and
+      ``search_logs --context`` read no other.
     - ``_lineage`` manifests carry ``path`` fields under the OLD root —
       REBUILD them under the new root (review fix r5: a verbatim copy
       pointed consumers at the source run).  Roots are compared

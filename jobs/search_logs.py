@@ -3,10 +3,13 @@
 ``clg`` analogue over this engine's stores (compress → SEARCH → extract).
 
 Layout and encoding mode come from the run's data marker; the prune
-dictionaries are the run's persisted ones (written by the pipeline's
-phase 3, extended cross-run for archive stores) — no per-session
-dictionary recompute.  Matching rows are written as parquet WITH their
-decoded text, and one JSON summary line goes to stdout.
+dictionary is the run's persisted template dictionary (written by the
+pipeline's phase 3, extended cross-run for archive stores) — no
+per-session dictionary recompute.  Dictionary-variable predicates test
+each row's ``dict_vars``, so no variable dictionary is read, and a root
+clustered by ``jobs/compact_sinks.py`` searches like its source.
+Matching rows are written as parquet WITH their decoded text, and one
+JSON summary line goes to stdout.
 
     spark-submit --py-files fluent_bit_clp_spark.zip jobs/search_logs.py \
         --input <sink-root> --output <hits-root> --run-id run-2026-08-16 \
@@ -62,7 +65,7 @@ def search(
     from fluent_bit_clp_spark.plans import lineage
     from fluent_bit_clp_spark.plans.pipeline import (
         load_sinks,
-        read_committed,
+        read_template_dictionary,
         search_run,
     )
 
@@ -93,7 +96,7 @@ def search(
             raise ValueError("--context supports a single --query")
         # context rows are OUTSIDE the hit prune by definition, so this
         # probes the layout-agnostic full view with broadcast hit spans;
-        # the persisted dictionaries still prune the hit computation
+        # the persisted template dictionary still prunes the hits
         marker = lineage.read_data_marker(input_root, run_id)
         tbl = load_sinks(spark, input_root, run_id)
         if sink is not None:
@@ -107,9 +110,11 @@ def search(
             single,
             n_before=nb,
             n_after=na,
-            dictionary=read_committed(spark, input_root, "logtype_dict"),
+            dictionary=read_template_dictionary(
+                spark, input_root, marker.get("sink_layout", "working")
+            ),
             mode=marker.get("encoding_mode", "i64"),
-            var_dictionary=read_committed(spark, input_root, "var_dict"),
+            var_dictionary=True,
             ignore_case=ignore_case,
         )
         mode = marker.get("encoding_mode", "i64")

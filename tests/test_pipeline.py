@@ -146,6 +146,18 @@ def test_chunk_hierarchical_equals_single_window(spark, tmp_path, tiny):
             assert got.equals(want), (name, offsets is not None)
 
 
+def _jobs_started(spark, group, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts, counted in a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_write_block_offsets_starts_at_most_three_jobs(spark, tmp_path, tiny):
     """The offsets phase is one write: the block-sum exchange, the
     per-sink window exchange and the write job — no staged sums table,
@@ -155,16 +167,30 @@ def test_write_block_offsets_starts_at_most_three_jobs(spark, tmp_path, tiny):
     src = str(tmp_path / "src")
     tiny.write.mode("overwrite").parquet(src)
     df = spark.read.parquet(src)
-    sc = spark.sparkContext
-    group = "offsets-job-pin"
-    sc.setJobGroup(group, group)
-    try:
-        write_block_offsets(spark, df, str(tmp_path / "offs"), block_turns=7)
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    n = _jobs_started(spark, "offsets-job-pin", lambda: write_block_offsets(
+        spark, df, str(tmp_path / "offs"), block_turns=7
+    ))
+    assert n <= 3
     assert not os.path.exists(str(tmp_path / "offs_sums"))
+
+
+@pytest.mark.parametrize("layout", ["working", "archive"])
+def test_run_to_sinks_starts_at_most_thirteen_jobs(spark, tmp_path, tiny,
+                                                   layout):
+    """After the data write, phase 3 writes sink_metrics (whose read-back
+    gives the manifest counts) and the layout's one template dictionary:
+    no variable dictionary, no second template dictionary on archive
+    runs, no count scan of the written table."""
+    from fluent_bit_clp_spark.sources.tables import JobConfig
+
+    src = str(tmp_path / "src")
+    tiny.write.mode("overwrite").parquet(src)
+    df = spark.read.parquet(src)
+    n = _jobs_started(spark, f"run-to-sinks-pin-{layout}", lambda: run_to_sinks(
+        spark, df, str(tmp_path / "out"), "run-j",
+        cfg=JobConfig(sink_layout=layout), emit_ir_chunks=True,
+    ))
+    assert n <= 13, n
 
 
 def test_chunk_monotone_and_bounded(encoded):
@@ -539,11 +565,17 @@ def test_archive_sink_layout_end_to_end(spark, tmp_path, tiny):
     )
     assert bad == 0
 
-    # sidecar artifacts are layout-independent
-    for name in ("logtype_dict", "var_dict"):
-        a = {tuple(r) for r in spark.read.parquet(os.path.join(out_a, name)).collect()}
-        w = {tuple(r) for r in spark.read.parquet(os.path.join(out_w, name)).collect()}
-        assert a == w, name
+    # sidecar artifacts are layout-independent: the archive run's one
+    # template dictionary projects onto the working run's logtype_dict,
+    # less the null template of the encode-failed edge rows (which the
+    # archive dictionary leaves out as unsearchable)
+    from fluent_bit_clp_spark.plans.pipeline import ARCHIVE_DICT_DIR
+
+    w = spark.read.parquet(os.path.join(out_w, "logtype_dict"))
+    a = spark.read.parquet(os.path.join(out_a, ARCHIVE_DICT_DIR))
+    assert {tuple(r) for r in a.select("logtype_id", "logtype").collect()} | {
+        (None, None)
+    } == {tuple(r) for r in w.select("logtype_id", "logtype").collect()}
     ma = spark.read.parquet(os.path.join(out_a, "sink_metrics"))
     mw = spark.read.parquet(os.path.join(out_w, "sink_metrics"))
     assert sorted(map(tuple, ma.drop("run_id").collect())) == sorted(
@@ -758,6 +790,59 @@ def test_search_logs_profile_mode(spark, tmp_path):
     assert p2.agg(F.sum("n_rows")).collect()[0][0] == n_match
 
 
+def test_search_over_compacted_archive_root(spark, tmp_path):
+    """A root clustered the way jobs/compact_sinks.py does it (the
+    clustered sinks plus ``copy_sidecars``, which copies only
+    ``archive_logtype_dict`` and ``_lineage``) searches like its source:
+    ``search_run`` and ``search_logs --context`` read no other dictionary,
+    and their hits equal the naive regex over the input text."""
+    import re
+    import sys as _sys
+
+    _sys.path.insert(
+        0,
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "jobs",
+        ),
+    )
+    from compact_sinks import copy_sidecars
+    from search_logs import search
+
+    from fluent_bit_clp_spark.operators.archive import compact_archive
+    from fluent_bit_clp_spark.plans.pipeline import search_run
+    from fluent_bit_clp_spark.sources.tables import JobConfig
+
+    df = transcripts(spark, 300, with_edge_rows=False)
+    src, dst = str(tmp_path / "src"), str(tmp_path / "compacted")
+    run_to_sinks(spark, df, src, "run-k", cfg=JobConfig(sink_layout="archive"))
+    compact_archive(
+        spark.read.parquet(os.path.join(src, "sinks"))
+    ).write.mode("error").partitionBy("sink").parquet(
+        os.path.join(dst, "sinks")
+    )
+    copy_sidecars(src, dst)
+
+    q = "Task * started by user * at attempt *"
+    pat = "^" + ".*".join(re.escape(p) for p in q.split("*")) + "$"
+    keys = ("conv_id", "turn_idx")
+    want = sorted(
+        tuple(r) for r in df.where(F.col("text").rlike(pat))
+        .select(*keys).collect()
+    )
+    assert want
+    got = search_run(spark, dst, q, "run-k").select(*keys).collect()
+    assert sorted(tuple(r) for r in got) == want
+
+    out = str(tmp_path / "ctx")
+    summary = search(spark, dst, out, "run-k", queries={"q": q},
+                     context=(1, 1))
+    ctx = spark.read.parquet(os.path.join(out, "hits"))
+    hits = ctx.where(F.col("is_match")).select(*keys).collect()
+    assert sorted(tuple(r) for r in hits) == want
+    assert summary["rows_written"] == ctx.count() > len(want)
+
+
 # --- committed-run search: fixed schemas, template prune, degenerate runs --
 
 _DASHBOARD = {
@@ -788,7 +873,8 @@ def committed(spark, tmp_path_factory):
 @pytest.mark.parametrize("layout", ["working", "archive"])
 def test_committed_schemas_equal_constants(spark, committed, layout, mode):
     """Schema-drift guard: every committed table's inferred schema is the
-    constant search_run and the read-backs use instead of inferring."""
+    constant search_run and the read-backs use instead of inferring; each
+    layout writes one template dictionary and no variable dictionary."""
     from fluent_bit_clp_spark.plans.pipeline import (
         ARCHIVE_DICT_DIR,
         DICT_SCHEMAS,
@@ -796,10 +882,12 @@ def test_committed_schemas_equal_constants(spark, committed, layout, mode):
     )
 
     root = committed[1][layout, mode]
+    assert "var_dict" not in DICT_SCHEMAS
+    assert not os.path.exists(os.path.join(root, "var_dict"))
     tables = {"sinks": SINKS_SCHEMAS[layout], **DICT_SCHEMAS}
-    if layout == "working":
-        assert not os.path.exists(os.path.join(root, ARCHIVE_DICT_DIR))
-        del tables[ARCHIVE_DICT_DIR]
+    absent = ARCHIVE_DICT_DIR if layout == "working" else "logtype_dict"
+    assert not os.path.exists(os.path.join(root, absent))
+    del tables[absent]
     for name, ddl in tables.items():
         path = os.path.join(root, name)
         inferred = spark.read.parquet(path).schema

@@ -229,9 +229,11 @@ def test_fragment_enumeration_4byte_mode(spark):
 
 def test_search_over_committed_sink_output(spark, tmp_path):
     """Integration (round 3): search runs against the PRODUCTION tables —
-    the committed partitionBy(sink) parquet plus the written logtype and
-    variable dictionaries from run_to_sinks — not just in-memory encodes;
-    results equal naive regex over the original input text."""
+    the committed partitionBy(sink) parquet plus the written logtype
+    dictionary from run_to_sinks (the dictionary-variable predicates test
+    each row's ``dict_vars``, switched on with ``var_dictionary=True``) —
+    not just in-memory encodes; results equal naive regex over the
+    original input text."""
     import os
 
     from fluent_bit_clp_spark.datagen import transcripts
@@ -242,9 +244,8 @@ def test_search_over_committed_sink_output(spark, tmp_path):
     run_to_sinks(spark, df, out, "run-s")
     sinks = spark.read.parquet(os.path.join(out, "sinks"))
     ltd = spark.read.parquet(os.path.join(out, "logtype_dict"))
-    vd = spark.read.parquet(os.path.join(out, "var_dict"))
     q = "Task * started by user * at attempt *"
-    got = search_encoded(sinks, q, dictionary=ltd, var_dictionary=vd)
+    got = search_encoded(sinks, q, dictionary=ltd, var_dictionary=True)
     want = _naive(df, q)
     assert got.count() == want.count() > 0
     got_keys = {(r.conv_id, r.turn_idx) for r in got.collect()}
