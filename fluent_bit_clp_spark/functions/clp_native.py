@@ -25,6 +25,10 @@ the invariant the reference's round-trip tests pin):
                       under parallelism and resume — SURVEY.md §7 risk 1).
 - ``logtype_id``    : xxhash64 of the logtype.
 
+The two id columns are defined once, by :func:`dict_var_ids_col` and
+:func:`logtype_id_col`; both encoders, ``archive.from_archive`` and the
+archive template dictionary append them with these expressions.
+
 A token is a *variable* iff it contains a digit (CLP's core heuristic).
 An int token is *encoded* iff it round-trips exactly through int64
 (no leading zeros, no "-0", ≤18 digits).  A float token is encoded iff
@@ -256,24 +260,23 @@ def clp_encode(
             f"case when k = {KIND_DICT} then v end)"
         ),
     )
-    out = out.withColumn(
-        "dict_var_ids",
-        F.expr(
-            "transform(dict_vars, v -> case when v is not null then xxhash64(v) end)"
-        ),
-    )
-    out = out.withColumn(
-        "logtype_id",
-        # xxhash64(NULL) is Spark's non-null seed hash; null text must
-        # yield null logtype_id like the pandas twin (clp_pandas.py
-        # _encode_one: None text → all-None row) or the twins diverge on
-        # exactly the column the equality test used to skip
-        F.expr(
-            "case when logtype is null then cast(null as bigint) "
-            "else xxhash64(logtype) end"
-        ),
-    )
+    out = out.withColumn("dict_var_ids", dict_var_ids_col())
+    out = out.withColumn("logtype_id", logtype_id_col())
     return out.drop("_esc", "_vars")
+
+
+def dict_var_ids_col(dict_vars: str = "dict_vars") -> Column:
+    """``dict_var_ids``: xxhash64 of each dictionary variable, null where
+    the slot holds an encoded variable."""
+    return F.transform(
+        dict_vars, lambda v: F.when(v.isNotNull(), F.xxhash64(v))
+    )
+
+
+def logtype_id_col(logtype: str = "logtype") -> Column:
+    """``logtype_id``: xxhash64 of the template, null for a null template
+    (null text) — xxhash64(NULL) is Spark's non-null seed hash."""
+    return F.when(F.col(logtype).isNotNull(), F.xxhash64(logtype))
 
 
 def clp_decode_column(

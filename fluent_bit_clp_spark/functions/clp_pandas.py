@@ -6,16 +6,17 @@ semantically identical native-expression implementation in
 ``clp_native.py`` (1.32M vs 230k rows/s, 32 cores, 4M-row table), because
 Catalyst evaluates higher-order-function lambdas interpreted — outside
 whole-stage codegen — while this path is one Arrow batch transfer plus a
-CPython `re` scan per batch (plus a memoized xxh64: id inputs repeat
-heavily — ~88% cold-pass hit rate on the generated corpus, ~1.9× the
-un-memoized single-core encode there; corpora dominated by per-row-unique
-variables see proportionally less).  ``clp_native`` remains the oracle-checkable
-reference implementation (DuckDB can replay it), and the two are asserted
-field-for-field equal in tests.
+CPython `re` scan per batch.  The UDF returns only what Python must
+compute (``logtype``, ``var_kinds``, ``encoded_vars``, ``dict_vars``);
+:func:`clp_encode_pandas` appends ``dict_var_ids`` and ``logtype_id`` with
+the same JVM ``xxhash64`` expressions the native encoder uses
+(``clp_native.dict_var_ids_col`` / ``logtype_id_col``), so Catalyst prunes
+them where a consumer drops them.  ``clp_native`` remains the
+oracle-checkable reference implementation (DuckDB can replay it).
 
 Both implementations share the exact token grammar (module constants are
 imported from ``clp_native``), so ``encode_native(x) == encode_pandas(x)``
-field-for-field — property-tested in ``tests/test_clp_pandas.py``.
+field-for-field — property-tested in ``tests/test_clp_core.py``.
 """
 
 from __future__ import annotations
@@ -45,6 +46,8 @@ from fluent_bit_clp_spark.functions.clp_native import (
     MODE_I64,
     PLACEHOLDER,
     VAR_TOKEN_RE,
+    dict_var_ids_col,
+    logtype_id_col,
 )
 
 _VAR = re.compile(VAR_TOKEN_RE)
@@ -71,17 +74,15 @@ _HAS_DIGIT = re.compile("[0-9]")
 
 _ENCODE_SCHEMA = (
     "logtype string, var_kinds array<int>, encoded_vars array<bigint>, "
-    "dict_vars array<string>, dict_var_ids array<bigint>, logtype_id bigint"
+    "dict_vars array<string>"
 )
 
 # ---------------------------------------------------------------------------
 # XXH64 (public xxHash spec), bit-exact with Spark's `xxhash64(string)`
 # (UTF-8 bytes, seed 42, result as signed i64) — verified against the JVM
 # implementation in tests/test_clp_core.py::test_python_xxh64_matches_spark.
-# Why in Python: Catalyst evaluates `transform(..., xxhash64)` interpreted
-# (~10 µs/element); here each id costs ~1-2 µs and rides the same Arrow
-# batch as the encode itself — and a multi-MiB turn with 10^5 variables no
-# longer creates a single-task straggler.
+# A reference hash only: the encode takes its ids from the JVM expressions
+# in clp_native, and no production path calls it.
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -150,24 +151,6 @@ def xxh64(data: bytes, seed: int = 42) -> int:
 
 @_functools.lru_cache(maxsize=16384)
 def _xxh64_cached(s: str) -> int:
-    return xxh64(s.encode("utf-8"))
-
-
-def _xxh64_str(s: str) -> int:
-    # pure-Python xxh64 is the encoder's single biggest cost, and its
-    # inputs repeat heavily (a handful of logtype templates hashed once
-    # per ROW; low-cardinality dict vars): memoizing short strings
-    # removes most of it (~88% cold-pass hit rate on the generated
-    # corpus).  The threshold counts CHARACTERS, so the per-worker
-    # worst case is 16384 × ≤1024 chars ≤ 4 KiB utf-8 ≈ 64 MiB of
-    # pinned keys on a pathological all-unique near-threshold corpus —
-    # bounded even × one Python worker per core (review fix r5: the
-    # first cut allowed ~1 GiB/worker).  Typical templates/vars are
-    # far under the threshold; longer values hash uncached.  Pure
-    # function, per-process cache — ids stay deterministic across
-    # partitions/resume.
-    if len(s) <= 1024:
-        return _xxh64_cached(s)
     return xxh64(s.encode("utf-8"))
 
 
@@ -281,9 +264,9 @@ def _encode_one(text: str | None, mode: str = MODE_I64):
 
 
 def _classify_one(text: str | None, mode: str = MODE_I64):
-    """var_kinds only — skips logtype assembly, float packing and all
-    xxh64 id hashing (VERDICT r2 #3: running the full encode to keep one
-    column doubled the histogram query's cost)."""
+    """var_kinds only — skips logtype assembly and float packing
+    (VERDICT r2 #3: running the full encode to keep one column doubled
+    the histogram query's cost)."""
     if text is None:
         return None
     fourbyte = mode == MODE_4BYTE
@@ -312,10 +295,10 @@ def _kinds_batch(texts: pd.Series, mode: str = MODE_I64) -> pd.Series:
 
 
 def _kinds_encoded_batch(texts: pd.Series, mode: str = MODE_I64) -> pd.DataFrame:
-    """(var_kinds, encoded_vars) only — skips logtype assembly, dict-var
-    collection and all xxh64 ids (guide §4: return only the columns the
-    consumer reads; the arrays of ids/strings were the bulk of the Arrow
-    return traffic for kind-histogram consumers)."""
+    """(var_kinds, encoded_vars) only — skips logtype assembly and
+    dict-var collection (guide §4: return only the columns the consumer
+    reads; the dict-var strings were the bulk of the Arrow return traffic
+    for kind-histogram consumers)."""
     fourbyte = mode == MODE_4BYTE
     _, toks_rows, n = _split_rows(texts)
     infos = _flat_infos(toks_rows, fourbyte)
@@ -381,8 +364,7 @@ def _float_ok(tok: str, fourbyte: bool) -> bool:
 
 
 # Plain-dict token caches, one per mode: an lru_cache HIT costs ~1 µs of
-# C-wrapper/key-tuple overhead per call; a dict .get() is ~20× cheaper
-# (the same round-6 finding that moved the id cache off lru_cache).
+# C-wrapper/key-tuple overhead per call; a dict .get() is ~20× cheaper.
 # Bounded: ≤ 65536 entries of ≤256-char keys ≈ ≤16 MiB per worker per
 # mode; no eviction — a full cache simply stops admitting (token
 # vocabularies are log templates' variable values, far under the cap in
@@ -407,47 +389,6 @@ def _tok_cache_miss(tok: str, fourbyte: bool, cache: dict):
     if len(tok) <= 256 and len(cache) < _TOK_CACHE_MAX_ENTRIES:
         cache[tok] = info
     return info
-
-
-# Plain-dict id cache for the batch encoder: an lru_cache HIT costs ~1.5 µs
-# of C-wrapper overhead per call, which at ~5 ids/row was the profiled #1
-# encode cost after round 5 — a dict .get() is ~20× cheaper, and the
-# misses are batch-hashed vectorized (xxh64_np).  Bounded by a BYTE
-# budget (64 MiB of key chars per worker) rather than an entry cap so
-# multi-KiB logtypes — hashed once per ROW without caching — stay
-# cacheable while a flood of unique long strings still can't pin
-# unbounded memory.
-_ID_CACHE: dict[str, int] = {}
-_ID_CACHE_BYTES = [0]
-_ID_CACHE_BYTE_BUDGET = 64 << 20
-# Entry cap alongside the byte budget (ADVICE r6: the byte budget counts
-# only key characters, so millions of tiny keys could pin ~100 B/entry of
-# dict overhead — multiple GiB — while staying under the byte budget).
-_ID_CACHE_MAX_ENTRIES = 1_000_000
-
-
-def _batch_ids(strs: list[str]) -> dict[str, int]:
-    """Ensure every string in ``strs`` is id-resolvable; batch-hash the
-    cache misses in one vectorized shot.  Returns the per-call overflow
-    dict for strings the bounded global cache refused."""
-    missing = sorted({s for s in strs if s not in _ID_CACHE})
-    if not missing:
-        return {}
-    from fluent_bit_clp_spark.functions.xxh64_np import xxh64_batch_strs
-
-    overflow = {}
-    used = _ID_CACHE_BYTES
-    for s, h in zip(missing, xxh64_batch_strs(missing)):
-        h = int(h)
-        if (
-            used[0] + len(s) <= _ID_CACHE_BYTE_BUDGET
-            and len(_ID_CACHE) < _ID_CACHE_MAX_ENTRIES
-        ):
-            _ID_CACHE[s] = h
-            used[0] += len(s)
-        else:
-            overflow[s] = h
-    return overflow
 
 
 _NO_TOKS: list = []
@@ -495,36 +436,21 @@ def _flat_infos(toks_rows: list, fourbyte: bool) -> list:
 
 def _encode_batch(texts: pd.Series, mode: str = MODE_I64) -> pd.DataFrame:
     """Batch twin of :func:`_encode_one` (equivalence pinned in
-    tests/test_clp_core.py).  r7 shape: ONE C-level split-with-capture
-    pass per row yields literals and tokens together (replacing the r6
-    sub+findall double scan); classification runs as a single
+    tests/test_clp_core.py).  ONE C-level split-with-capture pass per row
+    yields literals and tokens together; classification runs as a single
     comprehension over the batch's flattened token stream through the
     plain-dict ``_TOK_CACHE``; per-row arrays are O(1) slices of the flat
-    kind/enc/dict/id streams; all dict/logtype ids resolve through
-    ``_ID_CACHE`` + one vectorized xxh64 pass over the batch's unique
-    misses."""
+    kind/enc/dict streams.  No ids: :func:`clp_encode_pandas` appends
+    them as JVM expressions."""
     fourbyte = mode == MODE_4BYTE
     lt_col, toks_rows, n = _split_rows(texts)
     infos = _flat_infos(toks_rows, fourbyte)
     kinds_flat = [i[0] for i in infos]
     encs_flat = [i[1] for i in infos]
     dicts_flat = [i[2] for i in infos]
-    need_ids = [d for d in dicts_flat if d is not None]
-    need_ids.extend(lt for lt in lt_col if lt is not None)
-    overflow = _batch_ids(need_ids)
-    get_id = _ID_CACHE.get
-    if overflow:
-        def rid(s, _g=get_id, _o=overflow):
-            v = _g(s)
-            return v if v is not None else _o[s]
-    else:
-        rid = get_id  # every need_ids string was admitted to the cache
-    ids_flat = [None if d is None else rid(d) for d in dicts_flat]
     kinds_col: list = [None] * n
     encs_col: list = [None] * n
     dicts_col: list = [None] * n
-    ids_col: list = [None] * n
-    ltid_col: list = [None] * n
     o = 0
     for j, tk in enumerate(toks_rows):
         if tk is None:
@@ -533,23 +459,13 @@ def _encode_batch(texts: pd.Series, mode: str = MODE_I64) -> pd.DataFrame:
         kinds_col[j] = kinds_flat[o:e]
         encs_col[j] = encs_flat[o:e]
         dicts_col[j] = dicts_flat[o:e]
-        ids_col[j] = ids_flat[o:e]
-        ltid_col[j] = rid(lt_col[j])
         o = e
-    # logtype_id is the one SCALAR int column: pandas coerces int+None
-    # rows to float64, silently rounding |id| > 2^53 for EVERY row in any
-    # batch that contains a null text (and making the stored id depend on
-    # batch composition — breaking the hash-stability contract).  The
-    # array columns are object-dtype lists and convert exactly; pin the
-    # scalar to nullable Int64 so Arrow gets exact 64-bit values.
     return pd.DataFrame(
         {
             "logtype": pd.Series(lt_col, dtype="object"),
             "var_kinds": pd.Series(kinds_col, dtype="object"),
             "encoded_vars": pd.Series(encs_col, dtype="object"),
             "dict_vars": pd.Series(dicts_col, dtype="object"),
-            "dict_var_ids": pd.Series(ids_col, dtype="object"),
-            "logtype_id": pd.array(ltid_col, dtype="Int64"),
         }
     )
 
@@ -564,7 +480,8 @@ def clp_encode_udf(mode: str = MODE_I64, deterministic: bool = True):
     pushed-down filter drags the whole UDF below any repartition
     exchange, serializing the encode into the scan task (measured on
     e1_search: the entire encode+verify ran in ONE task).  Values are
-    identical either way."""
+    identical either way; the id expressions :func:`clp_encode_pandas`
+    appends read the UDF's output, so they stay above it too."""
     udf = pandas_udf(lambda s: _encode_batch(s, mode), _ENCODE_SCHEMA)
     return udf if deterministic else udf.asNondeterministic()
 
@@ -640,21 +557,19 @@ def clp_encode_pandas(
     mode: str = MODE_I64,
     deterministic: bool = True,
 ) -> DataFrame:
-    """Append encoding columns via the Arrow-batched pandas UDF path.
+    """Append encoding columns via the Arrow-batched pandas UDF path; the
+    two id columns are the native encoder's expressions over its output.
     ``deterministic=False``: see :func:`clp_encode_udf` — pass it when
     the caller filters on encode outputs downstream of a repartition."""
     out = df.withColumn(
         "_enc", clp_encode_udf(mode, deterministic)(F.col(text_col))
     )
-    return out.select(
-        "*",
-        F.col("_enc.logtype").alias("logtype"),
-        F.col("_enc.var_kinds").alias("var_kinds"),
-        F.col("_enc.encoded_vars").alias("encoded_vars"),
-        F.col("_enc.dict_vars").alias("dict_vars"),
-        F.col("_enc.dict_var_ids").alias("dict_var_ids"),
-        F.col("_enc.logtype_id").alias("logtype_id"),
-    ).drop("_enc")
+    return (
+        out.select("*", "_enc.*")
+        .drop("_enc")
+        .withColumn("dict_var_ids", dict_var_ids_col())
+        .withColumn("logtype_id", logtype_id_col())
+    )
 
 
 def clp_decode_pandas(

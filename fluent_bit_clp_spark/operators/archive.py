@@ -31,7 +31,10 @@ without re-parsing the template — but it is wasteful for *storage*:
 - ``encoded_vars``: nulls dropped — the kinds-0/1 values in appearance
                     order (int-vs-float recoverable from the template).
 - ``dict_vars``   : nulls dropped — the kind-2 tokens in appearance order.
-- ``var_kinds``, ``dict_var_ids``, ``logtype_id``: gone.
+- ``var_kinds``, ``dict_var_ids``, ``logtype_id``: gone.  Both encoders
+  append the two ids as JVM expressions (``clp_native.dict_var_ids_col``
+  / ``logtype_id_col``), so Catalyst prunes them: an archive write never
+  computes an id.
 
 ``from_archive`` is the exact inverse: it re-derives the three dropped
 columns and re-nulls the arrays back into alignment, byte-identical to
@@ -56,7 +59,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.clp_native import KIND_DICT, KIND_FLOAT, KIND_INT, PLACEHOLDER
+from ..functions.clp_native import (
+    KIND_DICT,
+    KIND_FLOAT,
+    KIND_INT,
+    PLACEHOLDER,
+    dict_var_ids_col,
+    logtype_id_col,
+)
 
 # Kind-specific placeholder bytes (0x11 keeps its meaning for int vars, so
 # an all-int archive template is byte-identical to the working layout).
@@ -172,16 +182,6 @@ def untyped_logtype_expr(col: str = "logtype") -> str:
     )
 
 
-def logtype_id_expr(col: str = "logtype") -> str:
-    """SQL expr: null-preserving xxhash64 template id (xxhash64(NULL) is
-    Spark's non-null seed hash; the encode layout keeps null ids for
-    null text).  Shared for the same never-diverge reason."""
-    return (
-        f"case when {col} is null then cast(null as bigint) "
-        f"else xxhash64({col}) end"
-    )
-
-
 def to_archive(encoded: DataFrame) -> DataFrame:
     """Working encode layout → columnar archive layout (see module doc).
 
@@ -216,9 +216,9 @@ def from_archive(archive: DataFrame) -> DataFrame:
 
     Re-derives ``var_kinds`` from the placeholder byte sequence,
     re-aligns the compacted arrays, and recomputes the two hash columns
-    (xxhash64 is deterministic, so the recomputed ids are identical to
-    the originals under any parallelism — the same stability argument
-    as SURVEY.md §7 risk 1).
+    with the encoders' own id expressions (xxhash64 is deterministic, so
+    the recomputed ids are identical to the originals under any
+    parallelism — the same stability argument as SURVEY.md §7 risk 1).
     """
     kinds = (
         f"transform(regexp_extract_all(logtype, "
@@ -257,12 +257,6 @@ def from_archive(archive: DataFrame) -> DataFrame:
         .withColumn("dict_vars", F.expr("transform(_merged, s -> s.dv)"))
         .drop("_merged")
         .withColumn("logtype", F.expr(untyped))
-        .withColumn(
-            "dict_var_ids",
-            F.expr(
-                "transform(dict_vars, v -> "
-                "case when v is not null then xxhash64(v) end)"
-            ),
-        )
-        .withColumn("logtype_id", F.expr(logtype_id_expr("logtype")))
+        .withColumn("dict_var_ids", dict_var_ids_col())
+        .withColumn("logtype_id", logtype_id_col())
     )

@@ -51,6 +51,7 @@ from fluent_bit_clp_spark.functions.clp_native import (
     MODE_I64,
     PLACEHOLDER,
     clp_decode_column,
+    logtype_id_col,
 )
 from fluent_bit_clp_spark.functions.clp_pandas import _encode_one
 
@@ -193,7 +194,7 @@ def compile_var_predicates(
     representation — so enumeration collapses to one predicate per token:
 
     - encoded int/float token → ``array_contains(encoded_vars, packed)``
-    - dictionary token        → ``array_contains(dict_var_ids, xxh64(tok))``
+    - dictionary token        → ``array_contains(dict_var_ids, xxhash64(tok))``
 
     Only *unambiguous* tokens compile (not adjacent to a ``*``: a fragment
     like ``container-*`` may extend into a longer data token).  Soundness:
@@ -223,8 +224,6 @@ def compile_var_predicates(
     variable-dictionary frame whose rows are not read); without it the
     token's predicate is skipped (sound: decode-verify follows).
     """
-    from fluent_bit_clp_spark.functions.clp_pandas import _xxh64_str
-
     parts = query.replace("?", "*").split("*")
     preds = []
     for i, part in enumerate(parts):
@@ -245,7 +244,7 @@ def compile_var_predicates(
                         preds.append(_has_dict_var(f"(?i)^{re.escape(d)}$"))
                 else:
                     preds.append(
-                        F.array_contains("dict_var_ids", F.lit(_xxh64_str(d)))
+                        F.array_contains("dict_var_ids", F.xxhash64(F.lit(d)))
                     )
             else:
                 preds.append(F.array_contains("encoded_vars", F.lit(e)))
@@ -634,10 +633,7 @@ def archive_logtype_dictionary(archive: DataFrame) -> DataFrame:
     same template expressions ``from_archive`` uses (kinds live only in
     the stored template, so this dict is not derivable from the working
     logtype_dict)."""
-    from fluent_bit_clp_spark.operators.archive import (
-        logtype_id_expr,
-        untyped_logtype_expr,
-    )
+    from fluent_bit_clp_spark.operators.archive import untyped_logtype_expr
 
     stored = (
         archive.select(F.col("logtype").alias("logtype_stored"))
@@ -646,7 +642,7 @@ def archive_logtype_dictionary(archive: DataFrame) -> DataFrame:
     )  # matches) and would poison the coverage check's null-unequal join
     return stored.withColumn(
         "logtype", F.expr(untyped_logtype_expr("logtype_stored"))
-    ).withColumn("logtype_id", F.expr(logtype_id_expr("logtype")))
+    ).withColumn("logtype_id", logtype_id_col())
 
 
 def search_stored_archive(

@@ -203,8 +203,11 @@ def encode_pipeline(
     rows/s on 32 cores, 4M-row table) because Catalyst evaluates
     higher-order-function lambdas interpreted, outside whole-stage codegen,
     while the UDF is one Arrow batch transfer + CPython `re` per batch.
-    The native path remains the oracle-checkable reference implementation
-    (equality property-tested in tests/test_clp_core.py).
+    ``logtype_id`` and ``dict_var_ids`` are the native path's JVM
+    ``xxhash64`` expressions over the UDF's output, so a consumer that
+    drops them (the archive layout) never computes them.  The native
+    path remains the oracle-checkable reference implementation (equality
+    property-tested in tests/test_clp_core.py).
     """
     out = parse_normalize(df)
     out = enrich(out, spark)
@@ -244,6 +247,12 @@ def run_to_sinks(
 
     ``cfg``: a :class:`sources.tables.JobConfig`; threads upload_size_mb /
     ir_bin_bytes / block_turns into the chunk assignment.
+
+    The template dictionary holds one ``(logtype_id, logtype)`` row per
+    non-null template in either layout: ``logtype_dict`` (working) or
+    ``archive_logtype_dict`` (archive).  An archive-layout write drops
+    the id columns, so Catalyst prunes their ``xxhash64`` expressions and
+    the ids are computed only for the dictionary.
     """
     from pyspark.sql import Observation
 
@@ -379,9 +388,13 @@ def run_to_sinks(
         # snapshot commit.
         _persist_archive_dictionary(spark, written_tbl, out_dir)
     else:
-        written_tbl.select("logtype_id", "logtype").distinct().write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, "logtype_dict"))
+        # encode-failed rows have a null template: unsearchable, and left
+        # out of the archive dictionary too
+        written_tbl.select("logtype_id", "logtype").where(
+            F.col("logtype_id").isNotNull()
+        ).distinct().write.mode("overwrite").parquet(
+            os.path.join(out_dir, "logtype_dict")
+        )
     if emit_ir_chunks:
         # The reference's actual output objects (per-chunk compressed IR
         # streams, `<tag>_<index>_...zst`) — derived from the committed

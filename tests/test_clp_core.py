@@ -4,7 +4,6 @@ Mirrors the correctness contract the reference pins to the clp-ffi-go
 round-trip tests: decode(encode(text)) must be byte-equal per turn.
 """
 
-import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -136,16 +135,13 @@ def test_roundtrip_property_numbers(nums):
     )
 )
 def test_batch_encode_equals_per_row(texts):
-    """The vectorized ``_encode_batch`` (r6: two-regex-pass rows, cached
-    token info, dict-cache + batch-hashed ids) must equal the per-row
-    ``_encode_one`` + scalar-hash composition on arbitrary text —
-    including control bytes, nulls and unicode."""
+    """The vectorized ``_encode_batch`` (one split pass per row, cached
+    token info) must equal the per-row ``_encode_one`` on arbitrary text —
+    including control bytes, nulls and unicode.  The ids are JVM
+    expressions, covered by ``test_native_equals_pandas_udf``."""
     import pandas as pd
 
-    from fluent_bit_clp_spark.functions.clp_pandas import (
-        _encode_batch,
-        _xxh64_str,
-    )
+    from fluent_bit_clp_spark.functions.clp_pandas import _encode_batch
 
     got = _encode_batch(pd.Series(texts, dtype=object))
     for i, t in enumerate(texts):
@@ -158,75 +154,37 @@ def test_batch_encode_equals_per_row(texts):
         assert row["var_kinds"] == k
         assert row["encoded_vars"] == e
         assert row["dict_vars"] == d
-        assert row["dict_var_ids"] == [
-            None if x is None else _xxh64_str(x) for x in d
-        ]
-        assert row["logtype_id"] == _xxh64_str(lt)
-
-
-def test_batch_encode_id_cache_budget_overflow():
-    """Strings past the id-cache byte budget still get correct ids via
-    the per-call overflow dict — only caching is skipped."""
-    import pandas as pd
-
-    from fluent_bit_clp_spark.functions import clp_pandas as C
-
-    saved_budget, saved_used = C._ID_CACHE_BYTE_BUDGET, C._ID_CACHE_BYTES[0]
-    try:
-        C._ID_CACHE_BYTE_BUDGET = 0  # force every id through overflow
-        texts = ["conv zz0verflow4a 12", "conv zz0verflow4b 3.5"]
-        got = C._encode_batch(pd.Series(texts, dtype=object))
-        for i, t in enumerate(texts):
-            lt, _, _, d = _encode_one(t)
-            assert got.iloc[i]["logtype_id"] == C._xxh64_str(lt)
-            assert got.iloc[i]["dict_var_ids"] == [
-                None if x is None else C._xxh64_str(x) for x in d
-            ]
-        assert "zz0verflow4a" not in C._ID_CACHE
-    finally:
-        C._ID_CACHE_BYTE_BUDGET = saved_budget
-        C._ID_CACHE_BYTES[0] = saved_used
 
 
 def test_native_equals_pandas_udf(spark):
-    """The JVM-native and pandas-UDF implementations agree field-for-field."""
+    """The JVM-native and pandas-UDF implementations agree field-for-field.
+    Compared as collected Python values: ``toPandas`` turns a nullable
+    bigint column into float64 and would round ids past 2^53."""
     from fluent_bit_clp_spark.datagen import transcripts
     from fluent_bit_clp_spark.functions.clp_pandas import clp_encode_pandas
 
     cols = ["logtype", "var_kinds", "encoded_vars", "dict_vars",
             "dict_var_ids", "logtype_id"]
     df = transcripts(spark, 500).select("conv_id", "turn_idx", "text")
-    a = (
-        clp_encode(df)
-        .select("conv_id", "turn_idx", *cols)
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    b = (
-        clp_encode_pandas(df)
-        .select("conv_id", "turn_idx", *cols)
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    def norm(x):
-        if x is None or isinstance(x, str):
-            return x
-        if pd.api.types.is_scalar(x):
-            return None if pd.isna(x) else int(x)
-        return [None if pd.isna(v) else int(v) if isinstance(v, float) else v for v in x]
 
+    def rows(enc):
+        return sorted(
+            map(tuple, enc.select("conv_id", "turn_idx", *cols).collect())
+        )
+
+    a = rows(clp_encode(df))
+    b = rows(clp_encode_pandas(df))
     # the id columns are NOT skipped: the null-row logtype_id divergence
     # (native xxhash64(NULL)=seed vs pandas None) hid behind exactly that
-    for col in cols:
-        assert [norm(x) for x in a[col]] == [norm(x) for x in b[col]], col
+    assert any(r[-1] is None for r in a)  # the null-text edge row
+    assert any(abs(r[-1]) > 1 << 53 for r in a if r[-1] is not None)
+    assert a == b
 
 
 def test_python_xxh64_matches_spark(spark):
-    """Pure-Python XXH64 (used for in-UDF id hashing) is bit-exact with
-    Spark's xxhash64(string) on varied inputs."""
-    from fluent_bit_clp_spark.functions.clp_pandas import _xxh64_str
+    """The pure-Python reference XXH64 is bit-exact with Spark's
+    xxhash64(string) on varied inputs."""
+    from fluent_bit_clp_spark.functions.clp_pandas import _xxh64_cached
 
     samples = [
         "", "a", "abc", "deadbeef01", "x" * 7, "y" * 8, "z" * 31, "w" * 32,
@@ -235,7 +193,7 @@ def test_python_xxh64_matches_spark(spark):
     df = spark.createDataFrame([(s,) for s in samples], "s string")
     got = {r.s: r.h for r in df.select("s", F.xxhash64("s").alias("h")).collect()}
     for s in samples:
-        assert _xxh64_str(s) == got[s], repr(s)
+        assert _xxh64_cached(s) == got[s], repr(s)
 
 
 def test_adversarial_texts_full_stack(spark):
@@ -291,11 +249,11 @@ def test_adversarial_texts_full_stack(spark):
 
 
 def test_pandas_ids_exact_when_batch_mixes_nulls(spark):
-    """Regression: pd.DataFrame coerces a scalar int column with any None
-    to float64, rounding |logtype_id| > 2^53 for EVERY row of the batch
-    (and making stored ids depend on batch composition).  Force null and
+    """Regression: when the UDF returned ``logtype_id`` as a pandas
+    column, pd.DataFrame coerced int+None to float64, rounding
+    |logtype_id| > 2^53 for EVERY row of the batch.  Force null and
     non-null texts into ONE partition (one Arrow batch) and require the
-    pandas ids to equal the native (JVM xxhash64) ids exactly."""
+    pandas encoder's ids to equal the native encoder's exactly."""
     from fluent_bit_clp_spark.functions.clp_pandas import clp_encode_pandas
 
     texts = [f"level=INFO latency_ms={i} status={i % 7}" for i in range(40)]
@@ -311,3 +269,4 @@ def test_pandas_ids_exact_when_batch_mixes_nulls(spark):
         for r in clp_encode(df).select("logtype", "logtype_id").collect()
     }
     assert a == b
+

@@ -81,3 +81,31 @@ def test_parallel_counts_scan_partitions_once(spark, tmp_path, monkeypatch):
     monkeypatch.setitem(E._SCAN_PARTITIONS, key, 10**6)
     again = spark.read.parquet(path)
     assert E._parallel(again, "id") is again
+
+
+@pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata absent")
+def test_encode_plan_udf_placement_and_id_pruning(spark):
+    """The non-deterministic encode UDF stays above e1_search's
+    ``_parallel`` exchange (a pushed-down filter would drag it into the
+    single scan task), and the id expressions are pruned where the
+    archive layout drops the ids."""
+    from fluent_bit_clp_spark.functions.clp_pandas import clp_encode_pandas
+    from fluent_bit_clp_spark.operators.archive import to_archive
+
+    plan = (
+        E.queries()["e1_search"](spark, SF)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    # tree strings print a parent before its children
+    assert plan.index("ArrowEvalPython") < plan.index(
+        "Exchange hashpartitioning(event_id"
+    )
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    enc = clp_encode_pandas(
+        spark.createDataFrame([("a 1 b0x",), (None,)], "text string")
+    )
+    assert "xxhash64" in optimized(enc)
+    assert "xxhash64" not in optimized(to_archive(enc))

@@ -566,16 +566,16 @@ def test_archive_sink_layout_end_to_end(spark, tmp_path, tiny):
     assert bad == 0
 
     # sidecar artifacts are layout-independent: the archive run's one
-    # template dictionary projects onto the working run's logtype_dict,
-    # less the null template of the encode-failed edge rows (which the
-    # archive dictionary leaves out as unsearchable)
+    # template dictionary (one row per kind-typed stored template)
+    # projects onto the working run's logtype_dict; neither holds the
+    # null template of the encode-failed edge rows, which is unsearchable
     from fluent_bit_clp_spark.plans.pipeline import ARCHIVE_DICT_DIR
 
     w = spark.read.parquet(os.path.join(out_w, "logtype_dict"))
     a = spark.read.parquet(os.path.join(out_a, ARCHIVE_DICT_DIR))
-    assert {tuple(r) for r in a.select("logtype_id", "logtype").collect()} | {
-        (None, None)
-    } == {tuple(r) for r in w.select("logtype_id", "logtype").collect()}
+    assert {tuple(r) for r in a.select("logtype_id", "logtype").collect()} == {
+        tuple(r) for r in w.select("logtype_id", "logtype").collect()
+    }
     ma = spark.read.parquet(os.path.join(out_a, "sink_metrics"))
     mw = spark.read.parquet(os.path.join(out_w, "sink_metrics"))
     assert sorted(map(tuple, ma.drop("run_id").collect())) == sorted(
