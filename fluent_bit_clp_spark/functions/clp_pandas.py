@@ -11,8 +11,12 @@ compute (``logtype``, ``var_kinds``, ``encoded_vars``, ``dict_vars``);
 :func:`clp_encode_pandas` appends ``dict_var_ids`` and ``logtype_id`` with
 the same JVM ``xxhash64`` expressions the native encoder uses
 (``clp_native.dict_var_ids_col`` / ``logtype_id_col``), so Catalyst prunes
-them where a consumer drops them.  ``clp_native`` remains the
-oracle-checkable reference implementation (DuckDB can replay it).
+them where a consumer drops them.  With ``sink_layout="archive"`` the
+UDF returns operators/archive.py's stored layout instead (kind-typed
+``logtype``, null-free ``encoded_vars``/``dict_vars``), equal to
+``to_archive`` of the working one, from the same split and classify
+pass.  ``clp_native`` remains the oracle-checkable reference
+implementation (DuckDB can replay it).
 
 Both implementations share the exact token grammar (module constants are
 imported from ``clp_native``), so ``encode_native(x) == encode_pandas(x)``
@@ -49,6 +53,7 @@ from fluent_bit_clp_spark.functions.clp_native import (
     dict_var_ids_col,
     logtype_id_col,
 )
+from fluent_bit_clp_spark.operators.archive import PH_DICT, PH_FLOAT, PH_INT
 
 _VAR = re.compile(VAR_TOKEN_RE)
 # Non-digit-leading equivalent of VAR_TOKEN_RE: matched spans are
@@ -75,6 +80,10 @@ _HAS_DIGIT = re.compile("[0-9]")
 _ENCODE_SCHEMA = (
     "logtype string, var_kinds array<int>, encoded_vars array<bigint>, "
     "dict_vars array<string>"
+)
+# operators/archive.py's stored layout (``to_archive``'s three columns).
+_ARCHIVE_SCHEMA = (
+    "logtype string, encoded_vars array<bigint>, dict_vars array<string>"
 )
 
 # ---------------------------------------------------------------------------
@@ -394,11 +403,16 @@ def _tok_cache_miss(tok: str, fourbyte: bool, cache: dict):
 _NO_TOKS: list = []
 
 
-def _split_rows(texts) -> tuple[list, list, int]:
+def _split_rows(texts, keep_parts: bool = False) -> tuple[list, list, int]:
     """Shared tokenize pass: per row, escape + ONE split-with-capture →
-    (logtype list, per-row token lists — None rows keep None in both).
-    Digit-free rows (no possible variable token) skip the split via the
-    ``_HAS_DIGIT`` probe."""
+    (per-row template, per-row token lists — None rows keep None in both).
+    The template is the joined working logtype, or with ``keep_parts``
+    the split list itself, for :func:`_encode_archive_batch` to join
+    with the per-kind placeholder bytes; its literal pieces are then
+    stored-escaped (0x12/0x13 → 0x10+'q'/'r') AFTER the split, since
+    escaping first would turn the text x, 0x12, y7 into the token
+    ``qy7``.  Digit-free rows (no possible variable token) skip the split
+    via the ``_HAS_DIGIT`` probe; their template is the escaped text."""
     split = _VAR_SPLIT.split
     join = PLACEHOLDER.join
     has_digit = _HAS_DIGIT.search
@@ -409,14 +423,25 @@ def _split_rows(texts) -> tuple[list, list, int]:
         if t is None:
             continue
         esc = t.replace(ESCAPE, ESCAPE + "e").replace(PLACEHOLDER, ESCAPE + "p")
+        stored = keep_parts and (PH_DICT in esc or PH_FLOAT in esc)
         if has_digit(esc) is None:
-            lt_col[j] = esc
+            lt_col[j] = _stored_escape(esc) if stored else esc
             toks_rows[j] = _NO_TOKS
             continue
         parts = split(esc)
-        lt_col[j] = join(parts[0::2])
         toks_rows[j] = parts[1::2]
+        if not keep_parts:
+            lt_col[j] = join(parts[0::2])
+            continue
+        if stored:
+            parts[0::2] = [_stored_escape(p) for p in parts[0::2]]
+        lt_col[j] = parts
     return lt_col, toks_rows, n
+
+
+def _stored_escape(piece: str) -> str:
+    """``archive._escape_archive`` on one literal piece."""
+    return piece.replace(PH_DICT, ESCAPE + "q").replace(PH_FLOAT, ESCAPE + "r")
 
 
 def _flat_infos(toks_rows: list, fourbyte: bool) -> list:
@@ -470,7 +495,59 @@ def _encode_batch(texts: pd.Series, mode: str = MODE_I64) -> pd.DataFrame:
     )
 
 
-def clp_encode_udf(mode: str = MODE_I64, deterministic: bool = True):
+# Stored-layout placeholder byte of each kind, indexed by KIND_INT /
+# KIND_FLOAT / KIND_DICT (0, 1, 2).
+_KIND_PH = (PH_INT, PH_FLOAT, PH_DICT)
+
+
+def _encode_archive_batch(texts: pd.Series, mode: str = MODE_I64) -> pd.DataFrame:
+    """Stored-layout twin of ``to_archive`` over :func:`_encode_batch`
+    (equivalence pinned in tests/test_archive.py): the same split and
+    classify pass, then each row's literal pieces are joined with its
+    tokens' kind-typed placeholder bytes, and the arrays are the row's
+    slices of the batch's null-free ``encoded``/``dict`` streams."""
+    fourbyte = mode == MODE_4BYTE
+    lt_col, toks_rows, n = _split_rows(texts, keep_parts=True)
+    infos = _flat_infos(toks_rows, fourbyte)
+    ph_flat = [_KIND_PH[i[0]] for i in infos]
+    encs_flat = [i[1] for i in infos if i[2] is None]
+    dicts_flat = [i[2] for i in infos if i[2] is not None]
+    encs_col: list = [None] * n
+    dicts_col: list = [None] * n
+    o = d = 0
+    for j, tk in enumerate(toks_rows):
+        if tk is None:
+            continue
+        e = o + len(tk)
+        ph = ph_flat[o:e]
+        nd = ph.count(PH_DICT)
+        encs_col[j] = encs_flat[o - d : e - d - nd]
+        dicts_col[j] = dicts_flat[d : d + nd]
+        if tk:
+            parts = lt_col[j]
+            parts[1::2] = ph
+            lt_col[j] = "".join(parts)
+        o = e
+        d += nd
+    return pd.DataFrame(
+        {
+            "logtype": pd.Series(lt_col, dtype="object"),
+            "encoded_vars": pd.Series(encs_col, dtype="object"),
+            "dict_vars": pd.Series(dicts_col, dtype="object"),
+        }
+    )
+
+
+# The UDF's batch function and return schema per sink layout.
+_ASSEMBLY = {
+    "working": (_encode_batch, _ENCODE_SCHEMA),
+    "archive": (_encode_archive_batch, _ARCHIVE_SCHEMA),
+}
+
+
+def clp_encode_udf(
+    mode: str = MODE_I64, deterministic: bool = True, sink_layout: str = "working"
+):
     """Built lazily — @pandas_udf parses its DDL schema against the active
     SparkSession, so module-import-time construction would fail.
 
@@ -481,8 +558,12 @@ def clp_encode_udf(mode: str = MODE_I64, deterministic: bool = True):
     exchange, serializing the encode into the scan task (measured on
     e1_search: the entire encode+verify ran in ONE task).  Values are
     identical either way; the id expressions :func:`clp_encode_pandas`
-    appends read the UDF's output, so they stay above it too."""
-    udf = pandas_udf(lambda s: _encode_batch(s, mode), _ENCODE_SCHEMA)
+    appends read the UDF's output, so they stay above it too.
+
+    ``sink_layout="archive"`` returns operators/archive.py's stored
+    layout (:func:`_encode_archive_batch`) instead of the working one."""
+    batch, schema = _ASSEMBLY[sink_layout]
+    udf = pandas_udf(lambda s: batch(s, mode), schema)
     return udf if deterministic else udf.asNondeterministic()
 
 
@@ -556,19 +637,25 @@ def clp_encode_pandas(
     text_col: str = "text",
     mode: str = MODE_I64,
     deterministic: bool = True,
+    sink_layout: str = "working",
 ) -> DataFrame:
     """Append encoding columns via the Arrow-batched pandas UDF path; the
     two id columns are the native encoder's expressions over its output.
     ``deterministic=False``: see :func:`clp_encode_udf` — pass it when
-    the caller filters on encode outputs downstream of a repartition."""
+    the caller filters on encode outputs downstream of a repartition.
+
+    ``sink_layout="archive"`` appends the stored layout instead, equal
+    to ``to_archive`` of the working one: kind-typed ``logtype``,
+    null-free ``encoded_vars``/``dict_vars``, no ``var_kinds`` and no
+    ids."""
     out = df.withColumn(
-        "_enc", clp_encode_udf(mode, deterministic)(F.col(text_col))
+        "_enc", clp_encode_udf(mode, deterministic, sink_layout)(F.col(text_col))
     )
-    return (
-        out.select("*", "_enc.*")
-        .drop("_enc")
-        .withColumn("dict_var_ids", dict_var_ids_col())
-        .withColumn("logtype_id", logtype_id_col())
+    out = out.select("*", "_enc.*").drop("_enc")
+    if sink_layout == "archive":
+        return out
+    return out.withColumn("dict_var_ids", dict_var_ids_col()).withColumn(
+        "logtype_id", logtype_id_col()
     )
 
 

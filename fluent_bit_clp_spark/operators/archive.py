@@ -41,17 +41,24 @@ columns and re-nulls the arrays back into alignment, byte-identical to
 what `clp_encode` produced (pinned in tests/test_archive.py, and in the
 driver gate as the "archive" leg of ``pipeline_roundtrip_violations``).
 
-Everything is native Spark SQL (whole-stage codegen, no Python).  The
+Everything is native Spark SQL (no Python).  The
 re-alignment is O(v log v) in the per-row variable count v (tag each
 compact value with its original index, merge, ``array_sort``) — the
 obvious prefix-count and ``aggregate``-fold shapes are both O(v²) and
 fail outright on the multi-MiB 240k-variable turns the synthetic
 transcript table deliberately contains.
 
-At 100 TB scale this is a storage-tier transform: run ``to_archive``
-immediately before the sink write and ``from_archive`` immediately after
-the scan; Catalyst prunes whichever reconstructed columns the query does
-not touch (e.g. a logtype-only search never pays the re-alignment).
+The pipeline's archive write does not run ``to_archive``: the encode
+UDF assembles the stored layout itself
+(``clp_pandas.clp_encode_pandas(..., sink_layout="archive")``, used by
+``run_to_sinks`` and ``stream_encode_to_sinks``), because the higher-
+order functions above run interpreted, per row, outside whole-stage
+codegen.  ``to_archive`` stays the native, oracle-checked reference
+that encoder is pinned equal to (tests/test_archive.py), and the
+transform for an already-encoded working table.  ``from_archive`` runs
+immediately after the scan; Catalyst prunes whichever reconstructed
+columns the query does not touch (e.g. a logtype-only search never pays
+the re-alignment).
 """
 
 from __future__ import annotations

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fluent_bit_clp_spark.functions.clp_pandas import clp_encode_pandas
+from fluent_bit_clp_spark.operators.archive import _DERIVED_COLS
 from fluent_bit_clp_spark.operators.chunk import (
     CHUNK_BYTES,
     DEFAULT_BLOCK_TURNS,
@@ -183,6 +184,7 @@ def encode_pipeline(
     block_turns: int = DEFAULT_BLOCK_TURNS,
     offsets: DataFrame | None = None,
     encoding_mode: str = "i64",
+    sink_layout: str = "working",
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → encoded turns.
 
@@ -205,9 +207,15 @@ def encode_pipeline(
     while the UDF is one Arrow batch transfer + CPython `re` per batch.
     ``logtype_id`` and ``dict_var_ids`` are the native path's JVM
     ``xxhash64`` expressions over the UDF's output, so a consumer that
-    drops them (the archive layout) never computes them.  The native
-    path remains the oracle-checkable reference implementation (equality
-    property-tested in tests/test_clp_core.py).
+    drops them never computes them.  The native path remains the
+    oracle-checkable reference implementation (equality property-tested
+    in tests/test_clp_core.py).
+
+    ``sink_layout="archive"`` makes the UDF assemble the stored layout
+    itself (kind-typed ``logtype``, null-free ``encoded_vars`` /
+    ``dict_vars``; no ``var_kinds`` and no ids), equal to
+    ``operators.archive.to_archive`` of the working output, so the write
+    runs none of ``to_archive``'s per-row higher-order functions.
     """
     out = parse_normalize(df)
     out = enrich(out, spark)
@@ -220,8 +228,9 @@ def encode_pipeline(
         block_turns=block_turns,
         offsets=offsets,
     )
-    out = clp_encode_pandas(out, "text", mode=encoding_mode)
-    return out
+    return clp_encode_pandas(
+        out, "text", mode=encoding_mode, sink_layout=sink_layout
+    )
 
 
 def run_to_sinks(
@@ -250,9 +259,11 @@ def run_to_sinks(
 
     The template dictionary holds one ``(logtype_id, logtype)`` row per
     non-null template in either layout: ``logtype_dict`` (working) or
-    ``archive_logtype_dict`` (archive).  An archive-layout write drops
-    the id columns, so Catalyst prunes their ``xxhash64`` expressions and
-    the ids are computed only for the dictionary.
+    ``archive_logtype_dict`` (archive).  An archive-layout run encodes
+    straight to the stored layout (``encode_pipeline(...,
+    sink_layout="archive")``) and writes :data:`OUTPUT_COLS` less
+    ``archive._DERIVED_COLS``: no ``to_archive`` projection runs, and the
+    ids are computed only for the dictionary.
     """
     from pyspark.sql import Observation
 
@@ -310,6 +321,7 @@ def run_to_sinks(
             block_turns=block_turns,
             offsets=offsets,
             encoding_mode=encoding_mode,
+            sink_layout=sink_layout,
         )
         encoded = encoded.withColumn(
             "encode_failed", F.col("text").isNull() | F.col("ts").isNull()
@@ -325,15 +337,13 @@ def run_to_sinks(
                 F.sum(F.col("encode_failed").cast("long")), F.lit(0)
             ).alias("encode_failures"),
         )
-        out_df = encoded.select(*OUTPUT_COLS, "encode_failed")
+        cols = OUTPUT_COLS
         if sink_layout == "archive":
-            # storage-tier transform right before the write (the 100 TB
-            # placement the archive module documents): kind-typed
-            # placeholders, derivable columns dropped — same single
-            # partitionBy(sink) commit, 0.57x the stored bytes
-            from fluent_bit_clp_spark.operators.archive import to_archive
-
-            out_df = to_archive(out_df)
+            # the encoder already assembled the stored layout (kind-typed
+            # placeholders, derivable columns never produced): the same
+            # single partitionBy(sink) commit, 0.57x the stored bytes
+            cols = [c for c in OUTPUT_COLS if c not in _DERIVED_COLS]
+        out_df = encoded.select(*cols, "encode_failed")
         (
             out_df.write.mode("overwrite")
             .partitionBy("sink")

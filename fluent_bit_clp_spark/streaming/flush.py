@@ -31,8 +31,9 @@ def stream_encode_to_sinks(
 
     ``sink_layout="archive"`` stores the columnar archive layout
     (operators/archive.py) — same option as the batch surface's
-    ``JobConfig.sink_layout``; the transform is a stateless map, so it
-    composes with the streaming plan unchanged."""
+    ``JobConfig.sink_layout``, and the same encoder assembles it
+    (``clp_encode_pandas(..., sink_layout="archive")``), a stateless map
+    that composes with the streaming plan unchanged."""
     from fluent_bit_clp_spark.functions.clp_pandas import clp_encode_pandas
     from fluent_bit_clp_spark.operators.enrich import enrich
     from fluent_bit_clp_spark.operators.route import with_sink
@@ -43,11 +44,9 @@ def stream_encode_to_sinks(
         raise ValueError(
             f"sink_layout: must be 'working' or 'archive', got {sink_layout!r}"
         )
-    enc = clp_encode_pandas(with_sink(enrich(stream, spark)))
-    if sink_layout == "archive":
-        from fluent_bit_clp_spark.operators.archive import to_archive
-
-        enc = to_archive(enc)
+    enc = clp_encode_pandas(
+        with_sink(enrich(stream, spark)), sink_layout=sink_layout
+    )
     return (
         enc.writeStream.format("parquet")
         .option("path", out_dir)

@@ -1,16 +1,21 @@
 """Columnar archive layout (operators/archive.py): exact round trip,
-kind-typed placeholder semantics, and the no-Python plan guarantee."""
+kind-typed placeholder semantics, the no-Python plan guarantee, and the
+archive-assembling encoder's equality with ``to_archive``."""
 
 import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from fluent_bit_clp_spark.functions.clp_native import (
+    MODE_4BYTE,
+    MODE_I64,
     clp_decode_column,
     clp_encode,
 )
+from fluent_bit_clp_spark.functions.clp_pandas import clp_encode_pandas
 from fluent_bit_clp_spark.operators.archive import (
     PH_DICT,
     PH_FLOAT,
@@ -119,6 +124,51 @@ def test_archive_roundtrip_scales_to_huge_turns(spark):
     )
     enc = _frame(spark, [text, None])
     assert _rows(from_archive(to_archive(enc))) == _rows(enc)
+
+
+def _archive_twins(spark, texts, mode):
+    """(archive-assembling pandas encoder, ``to_archive`` of the native
+    encoder) over ``texts``, as collected rows in input order."""
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    got = clp_encode_pandas(df, mode=mode, sink_layout="archive")
+    want = to_archive(clp_encode(df, "text", mode=mode))
+    assert got.columns == want.columns
+    return (
+        [tuple(r) for r in got.orderBy("i").collect()],
+        [tuple(r) for r in want.orderBy("i").collect()],
+    )
+
+
+@pytest.mark.parametrize("mode", [MODE_I64, MODE_4BYTE])
+def test_archive_encoder_equals_to_archive(spark, mode):
+    """The pipeline's archive write is assembled by the encoder; it must
+    equal the native reference on the edge cases (literal 0x12 before a
+    token: x, 0x12, y7 escaped before the split would tokenize ``qy7``)
+    and on one 60k-variable turn."""
+    huge = " ".join(
+        str(i) if i % 3 else f"id-{i}beef {i}.5" for i in range(45_000)
+    )
+    got, want = _archive_twins(spark, CASES + [huge], mode)
+    assert got == want
+    # the huge turn: 60k variables, 15k of them dictionary variables
+    assert (len(got[-1][3]), len(got[-1][4])) == (45_000, 15_000)
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    texts=st.lists(
+        st.one_of(
+            st.none(),
+            st.text(alphabet="\x10\x11\x12\x13 0123456789.-xq", max_size=40),
+        ),
+        min_size=1,
+        max_size=8,
+    ),
+    mode=st.sampled_from([MODE_I64, MODE_4BYTE]),
+)
+def test_archive_encoder_equals_to_archive_property(spark, texts, mode):
+    got, want = _archive_twins(spark, texts, mode)
+    assert got == want
 
 
 def test_from_archive_prunes_unused_reconstruction(spark, tmp_path):

@@ -193,6 +193,42 @@ def test_run_to_sinks_starts_at_most_thirteen_jobs(spark, tmp_path, tiny,
     assert n <= 13, n
 
 
+def _python_eval_schemas(df) -> list[str]:
+    """Output schema of every Python eval node in ``df``'s optimized
+    plan."""
+    stack, out = [df._jdf.queryExecution().optimizedPlan()], []
+    while stack:
+        node = stack.pop()
+        if "EvalPython" in node.nodeName():
+            out.append(node.schema().simpleString())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_archive_encode_plan_has_no_to_archive_work(spark, tmp_path, tiny):
+    """An archive-layout encode assembles the stored layout in its UDF:
+    the write projection runs no higher-order function (``to_archive``'s
+    zip_with/transform/filter) and no id hash, and the Python eval node
+    returns no ``var_kinds``."""
+    from fluent_bit_clp_spark.operators.archive import _DERIVED_COLS
+    from fluent_bit_clp_spark.plans.pipeline import OUTPUT_COLS
+
+    src = str(tmp_path / "src")
+    tiny.write.mode("overwrite").parquet(src)
+    enc = encode_pipeline(
+        spark.read.parquet(src), spark, sink_layout="archive"
+    ).select(*[c for c in OUTPUT_COLS if c not in _DERIVED_COLS])
+    plan = enc._jdf.queryExecution().executedPlan().toString()
+    for banned in ("lambdafunction", "zip_with", "var_kinds", "xxhash64"):
+        assert banned not in plan, banned
+    (schema,) = _python_eval_schemas(enc)
+    assert schema.endswith(
+        "pythonUDF0:struct<logtype:string,encoded_vars:array<bigint>,"
+        "dict_vars:array<string>>>"
+    ), schema
+
+
 def test_chunk_monotone_and_bounded(encoded):
     """chunk_id monotone in (conv_id, turn_idx) per sink; every chunk's
     start-offset span ≤ chunk_bytes (16 MB default)."""
