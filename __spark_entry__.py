@@ -1163,8 +1163,8 @@ def q_pipeline_compression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's headline claim (CLP IR + compression vs raw bytes,
     README.md:16-18) made measurable.  Row shape (6 sinks) and event/raw
     byte counts are fully deterministic; compressed bytes additionally
-    depend on the codec build in the environment (zstandard vs pyarrow
-    zstd vs zlib fallback — hence rows-only, no value oracle)."""
+    depend on the zstd build bundled with the environment's pyarrow
+    (hence rows-only, no value oracle)."""
     from fluent_bit_clp_spark.operators.irstream import write_ir_chunks
 
     df = transcripts(spark, 2000)

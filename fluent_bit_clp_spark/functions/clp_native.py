@@ -7,7 +7,8 @@ calls into clp-ffi-go, and the CLP OSDI'21 paper for the public semantics)
 as pure Column expressions: regexp tokenization + higher-order array
 functions.  Everything here runs JVM-side inside whole-stage codegen — no
 Python in the hot path at all.  A semantically identical pandas-UDF
-implementation lives in `clp_pandas.py`; both are tested for equality.
+encoder lives in `clp_pandas.py`; both are tested for equality.  The
+decoder here (:func:`clp_decode_column`) is the only Spark decoder.
 
 Encoding model (our own IR layout, lossless for the message payload —
 the invariant the reference's round-trip tests pin):

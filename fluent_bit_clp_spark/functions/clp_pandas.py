@@ -1,5 +1,9 @@
-"""CLP encode/decode as Arrow-vectorized pandas UDFs — semantic twin of
-:mod:`clp_native`.
+"""CLP encode as Arrow-vectorized pandas UDFs — semantic twin of
+:mod:`clp_native`'s encoder.  Encode only: every Spark consumer decodes
+with the native ``clp_native.clp_decode_column`` expression (no Python
+crossing); :func:`_decode_one` is kept as the per-row reference decoder
+the tests compare against, and :func:`_encode_one` as the per-row encoder
+the search query compiler uses.
 
 This module is the PRODUCTION encode path: measured 5.7× faster than the
 semantically identical native-expression implementation in
@@ -613,25 +617,6 @@ def _decode_one(logtype, kinds, encoded, dicts, mode: str = MODE_I64) -> str | N
     return joined.replace(ESCAPE + "p", PLACEHOLDER).replace(ESCAPE + "e", ESCAPE)
 
 
-def _decode_batch(
-    logtype: pd.Series, kinds: pd.Series, encoded: pd.Series, dicts: pd.Series,
-    mode: str = MODE_I64,
-) -> pd.Series:
-    return pd.Series(
-        [
-            _decode_one(lt, k, e, d, mode)
-            for lt, k, e, d in zip(logtype, kinds, encoded, dicts)
-        ],
-        dtype="object",
-    )
-
-
-def clp_decode_udf(mode: str = MODE_I64):
-    return pandas_udf(
-        lambda lt, k, e, d: _decode_batch(lt, k, e, d, mode), "string"
-    )
-
-
 def clp_encode_pandas(
     df: DataFrame,
     text_col: str = "text",
@@ -656,22 +641,4 @@ def clp_encode_pandas(
         return out
     return out.withColumn("dict_var_ids", dict_var_ids_col()).withColumn(
         "logtype_id", logtype_id_col()
-    )
-
-
-def clp_decode_pandas(
-    df: DataFrame, out_col: str = "decoded_text", mode: str = MODE_I64
-) -> DataFrame:
-    # null-free i64 arrays: Arrow→pandas turns array<bigint>-with-nulls
-    # into float64, corrupting packed values > 2^53 and breaking bit ops.
-    # Dict positions never read the value (kind gates it) — 0 is safe.
-    enc_nn = F.expr("transform(encoded_vars, x -> coalesce(x, 0L))")
-    return df.withColumn(
-        out_col,
-        clp_decode_udf(mode)(
-            F.col("logtype"),
-            F.col("var_kinds"),
-            enc_nn,
-            F.col("dict_vars"),
-        ),
     )

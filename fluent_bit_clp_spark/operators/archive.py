@@ -81,7 +81,6 @@ PH_INT = "\x11"
 PH_DICT = "\x12"
 PH_FLOAT = "\x13"
 
-_ARCHIVE_COLS = ("logtype", "encoded_vars", "dict_vars")
 _DERIVED_COLS = ("var_kinds", "dict_var_ids", "logtype_id")
 
 

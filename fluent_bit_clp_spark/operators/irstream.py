@@ -40,10 +40,9 @@ variable costs exactly four bytes on the wire; feed it columns produced
 by ``clp_encode*(mode="4byte")`` (int32-range ints, CLP float property
 words — functions/clp_native.py module docstring).
 
-Compression: REAL zstd — ``zstandard`` module when present, else
-pyarrow's bundled zstd codec (standard frames, magic ``28 B5 2F FD``;
-round-3 upgrade of the round-2 zlib fallback), zlib only as the last
-resort.  Blobs are therefore decompressible by standard zstd tooling,
+Compression: zstd through pyarrow's bundled codec (standard frames,
+magic ``28 B5 2F FD``; streaming API, so no decompressed-size
+bookkeeping).  Blobs are therefore decompressible by standard zstd tooling,
 matching the reference's Zstd stage (`internal/irzstd/writer.go`).
 Round-trip is exact (tests/test_irstream.py, including ts_ms = -1 and
 4-byte payloads; frame-magic pinned in test_zstd_codec_real_frames).
@@ -58,53 +57,17 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
-try:  # pragma: no cover - environment probe
-    import zstandard as _zstd
 
-    def _compress(b: bytes) -> bytes:
-        return _zstd.ZstdCompressor(level=3).compress(b)
+def _compress(b: bytes) -> bytes:
+    buf = pa.BufferOutputStream()
+    with pa.CompressedOutputStream(buf, "zstd") as z:
+        z.write(b)
+    return buf.getvalue().to_pybytes()
 
-    def _decompress(b: bytes) -> bytes:
-        # streaming decompressobj, NOT one-shot decompress(): pyarrow's
-        # CompressedOutputStream emits frames without the content-size
-        # header field, which the one-shot API requires — a mixed
-        # writer/reader environment (pyarrow-written blob, zstandard
-        # reader) must still round-trip (review fix r3).
-        return _zstd.ZstdDecompressor().decompressobj().decompress(b)
 
-    CODEC = "zstd"
-except ImportError:  # pragma: no cover
-    try:
-        # REAL zstd via pyarrow's bundled codec (round 3 — closes the
-        # round-2 zlib-fallback gap): CompressedOutputStream emits
-        # standard zstd frames (magic 0x28B52FFD verified), so the blobs
-        # are decompressible by any zstd tooling and the `.zst` object
-        # extension is truthful.  Streaming API → no decompressed-size
-        # bookkeeping needed.
-        pa.CompressedOutputStream(pa.BufferOutputStream(), "zstd")
+def _decompress(b: bytes) -> bytes:
+    return bytes(pa.CompressedInputStream(pa.BufferReader(b), "zstd").read())
 
-        def _compress(b: bytes) -> bytes:
-            buf = pa.BufferOutputStream()
-            with pa.CompressedOutputStream(buf, "zstd") as z:
-                z.write(b)
-            return buf.getvalue().to_pybytes()
-
-        def _decompress(b: bytes) -> bytes:
-            return bytes(
-                pa.CompressedInputStream(pa.BufferReader(b), "zstd").read()
-            )
-
-        CODEC = "zstd"
-    except Exception:
-        import zlib
-
-        def _compress(b: bytes) -> bytes:
-            return zlib.compress(b, 6)
-
-        def _decompress(b: bytes) -> bytes:
-            return zlib.decompress(b)
-
-        CODEC = "zlib"
 
 VERSION = 4  # v4: delta varint timestamps + varint lengths (module
 # docstring); v3 added the timezone preamble (VERDICT r2 #3): the
@@ -139,7 +102,7 @@ def _object_key(sink: str, chunk_id: int, first_ts_ms, blob: bytes) -> str:
     (`internal/outctx/manager.go:86-90`) — with the wall-clock timestamp
     replaced by the chunk's first event time and the random upload id by a
     content-hash prefix, so re-runs produce identical keys (idempotent
-    re-PUT).  Extension reflects the actual codec (.zst or .zlib)."""
+    re-PUT)."""
     import hashlib
     from datetime import datetime, timezone
 
@@ -151,8 +114,7 @@ def _object_key(sink: str, chunk_id: int, first_ts_ms, blob: bytes) -> str:
             .strftime("%Y-%m-%dT%H:%M:%SZ")
         )
     cid = hashlib.md5(blob).hexdigest()[:8]
-    ext = "zst" if CODEC == "zstd" else CODEC  # reference uses .zst
-    return f"{sink}_{chunk_id}_{stamp}_{cid}.{ext}"
+    return f"{sink}_{chunk_id}_{stamp}_{cid}.zst"
 
 
 def _put_varint(out: bytearray, n: int) -> None:

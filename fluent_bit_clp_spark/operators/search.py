@@ -34,6 +34,13 @@ Plan here (the classic prune + verify):
    regex to the reconstructed text.  Decode cost is confined to candidate
    rows — the pruning is what makes search on 100 TB viable.
 
+There is one evaluation of these steps, :func:`search_encoded_multi` (a
+dashboard of named queries: one scan pruned to the OR of the queries,
+one decode, each row tagged by the exact verify of every query it
+matches).  A single search is its one-entry case with the tag column
+dropped, and the archive pair runs it over ``from_archive`` of the
+scan-pruned stored rows.
+
 Equality with naive regex over raw text is asserted in
 tests/test_search.py.
 """
@@ -42,7 +49,7 @@ from __future__ import annotations
 
 import re
 from functools import reduce
-from operator import or_
+from operator import and_, or_
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -375,10 +382,11 @@ def search_encoded(
     ignore_case: bool = False,
     max_templates: int = 1024,
 ) -> DataFrame:
-    """Rows of the encoded table matching ``query``.
+    """Rows of the encoded table matching ``query`` — the one-entry case
+    of :func:`search_encoded_multi` (same columns as ``encoded``, no
+    ``query_name``).
 
-    Prune order, all in ONE Filter that Catalyst keeps in this order:
-    template ``isin`` from ``dictionary`` when supplied
+    Prune order: template ``isin`` from ``dictionary`` when supplied
     (:func:`template_prune` — a ``logtype_dict(logtype_id, logtype)``
     covering the table) → relaxed logtype pattern → per-variable
     predicates (:func:`compile_var_predicates` — concrete values prune
@@ -397,26 +405,10 @@ def search_encoded(
     prune stage folds case too (see the compile functions), so pruning
     power is retained for letter-free values and dictionary
     tokens/fragments."""
-    pattern = compile_relaxed_pattern(query, ignore_case)
-    if dictionary is not None:
-        encoded = template_prune(
-            encoded, dictionary, [pattern], "logtype_id", "logtype_id",
-            max_templates,
-        )
-    cand = encoded.where(F.col("logtype").rlike(pattern))
-    for pred in compile_var_predicates(
-        query, mode, ignore_case, var_dictionary
-    ):
-        cand = cand.where(pred)
-    if var_dictionary:
-        for pred in compile_fragment_var_predicates(
-            query, var_dictionary, ignore_case=ignore_case
-        ):
-            cand = cand.where(pred)
-    verified = cand.withColumn("_decoded", clp_decode_column(mode=mode)).where(
-        F.col("_decoded").rlike(exact_text_pattern(query, ignore_case))
-    )
-    return verified.drop("_decoded")
+    return search_encoded_multi(
+        encoded, {"query": query}, dictionary, mode, var_dictionary,
+        ignore_case, max_templates,
+    ).drop("query_name")
 
 
 def search_encoded_multi(
@@ -433,47 +425,45 @@ def search_encoded_multi(
     string; the result is the matching rows with a ``query_name`` column
     (a row matching k queries appears k times).
 
-    Scale rationale: N separate :func:`search_encoded` calls cost N scans
-    and up to N decodes of overlapping candidate sets.  Here the scan is
-    pruned ONCE — the template ``isin`` over the union of every query's
-    matching templates (:func:`template_prune`, when ``dictionary`` is
-    supplied), then the OR of the per-query logtype-pattern+variable
-    predicates — the survivors are decoded ONCE, and per-query
-    attribution is a vectorized array construction over the decoded
-    column: per-query exact verify plus that query's own prune
-    predicates re-applied, so results are row-for-row identical to
-    running each query alone.  At 100 TB the scan dominates; this
-    amortizes it across the whole dashboard.
+    This is the one search evaluation: :func:`search_encoded` is the
+    one-entry case, and the archive pair runs it over ``from_archive``.
+
+    Scale rationale: N separate searches cost N scans and up to N decodes
+    of overlapping candidate sets.  Here the scan is pruned ONCE — the
+    template ``isin`` over the union of every query's matching templates
+    (:func:`template_prune`, when ``dictionary`` is supplied), then the
+    OR of the per-query logtype-pattern+variable predicates (each
+    documented on :func:`search_encoded`) — the survivors are decoded
+    ONCE, and each is tagged with the queries whose exact verify regex
+    matches the decoded text.  Every query's prune is a sound superset of
+    its exact match, so the exact verify alone attributes a row exactly
+    as running that query by itself would.  At 100 TB the scan dominates;
+    this amortizes it across the whole dashboard.
     """
     if not queries:
         raise ValueError("queries must be a non-empty {name: wildcard} map")
-    per_query: dict[str, object] = {}
-    patterns: dict[str, str] = {}
-    for name, q in queries.items():
-        patterns[name] = compile_relaxed_pattern(q, ignore_case)
+    patterns = [compile_relaxed_pattern(q, ignore_case) for q in queries.values()]
+    prunes = []
+    for q, pattern in zip(queries.values(), patterns):
         preds = compile_var_predicates(q, mode, ignore_case, var_dictionary)
         if var_dictionary:
             preds += compile_fragment_var_predicates(
                 q, var_dictionary, ignore_case=ignore_case
             )
-        prune = F.col("logtype").rlike(patterns[name])
-        for p in preds:
-            prune = prune & p
-        per_query[name] = prune
+        prunes.append(reduce(and_, preds, F.col("logtype").rlike(pattern)))
     if dictionary is not None:
         encoded = template_prune(
-            encoded, dictionary, list(patterns.values()), "logtype_id",
-            "logtype_id", max_templates,
+            encoded, dictionary, patterns, "logtype_id", "logtype_id",
+            max_templates,
         )
-    decoded = encoded.where(reduce(or_, per_query.values())).withColumn(
+    decoded = encoded.where(reduce(or_, prunes)).withColumn(
         "_decoded", clp_decode_column(mode=mode)
     )
     tags = F.array_compact(
         F.array(
             *[
                 F.when(
-                    per_query[name]
-                    & F.col("_decoded").rlike(
+                    F.col("_decoded").rlike(
                         exact_text_pattern(queries[name], ignore_case)
                     ),
                     F.lit(name),
@@ -675,7 +665,8 @@ def search_stored_archive(
     IN-list; above it the relaxed pattern filters the reconstructed
     ``logtype`` instead — identical results either way.  Remaining
     stages (variable predicates, fragment predicates, decode-verify) are
-    exactly :func:`search_encoded` over the reconstructed rows.
+    exactly :func:`search_encoded` over the reconstructed rows.  This is
+    the one-entry case of :func:`search_stored_archive_multi`.
 
     ``verify_coverage=True`` (opt-in — it costs one column-pruned
     distinct pass over the archive) proves the covering contract instead
@@ -699,29 +690,36 @@ def search_stored_archive(
     ``ignore_case`` folds case end-to-end (template prune included —
     the dictionary rlike carries ``(?i)``, so differently-cased stored
     templates all enter the isin pushdown); see :func:`search_encoded`."""
+    return search_stored_archive_multi(
+        archive, {"query": query}, archive_dictionary, mode, var_dictionary,
+        max_templates, verify_coverage, time_range, ts_col, ignore_case,
+    ).drop("query_name")
+
+
+def search_stored_archive_multi(
+    archive: DataFrame,
+    queries: dict[str, str],
+    archive_dictionary: DataFrame,
+    mode: str = MODE_I64,
+    var_dictionary: DataFrame | bool | None = None,
+    max_templates: int = 1024,
+    verify_coverage: bool = False,
+    time_range: tuple[int, int] | None = None,
+    ts_col: str = "ts_ms",
+    ignore_case: bool = False,
+) -> DataFrame:
+    """The saved-searches dashboard over a STORED archive: one scan,
+    pruned at scan level to the union of every query's matching templates
+    (one ``isin`` pushdown — row groups outside ALL queries are skipped
+    on footer stats), reconstructed once by ``from_archive``, then
+    decoded once and attributed per query by :func:`search_encoded_multi`.
+    Semantics and guards are documented on :func:`search_stored_archive`
+    (the one-entry case); output carries ``query_name`` like
+    :func:`search_encoded_multi`."""
     from fluent_bit_clp_spark.operators.archive import from_archive
 
-    pruned = _pruned_archive(
-        archive, [compile_relaxed_pattern(query, ignore_case)],
-        archive_dictionary, max_templates, verify_coverage, time_range, ts_col,
-    )
-    return search_encoded(
-        from_archive(pruned), query, None, mode, var_dictionary, ignore_case
-    )
-
-
-def _pruned_archive(
-    archive: DataFrame,
-    patterns: list[str],
-    archive_dictionary: DataFrame,
-    max_templates: int,
-    verify_coverage: bool,
-    time_range: tuple[int, int] | None,
-    ts_col: str,
-) -> DataFrame:
-    """Shared stored-archive prune: guards + the template-isin scan
-    pushdown for any template matching ANY of ``patterns`` (single-query
-    callers pass one)."""
+    if not queries:
+        raise ValueError("queries must be a non-empty {name: wildcard} map")
     if time_range is not None:
         if ts_col not in archive.columns:
             raise ValueError(
@@ -752,39 +750,10 @@ def _pruned_archive(
                 "with archive_logtype_dictionary(archive) or extend the "
                 "persisted dictionary at write time"
             )
-    return template_prune(
-        archive, archive_dictionary, patterns, "logtype_stored", "logtype",
-        max_templates,
-    )
-
-
-def search_stored_archive_multi(
-    archive: DataFrame,
-    queries: dict[str, str],
-    archive_dictionary: DataFrame,
-    mode: str = MODE_I64,
-    var_dictionary: DataFrame | bool | None = None,
-    max_templates: int = 1024,
-    verify_coverage: bool = False,
-    time_range: tuple[int, int] | None = None,
-    ts_col: str = "ts_ms",
-    ignore_case: bool = False,
-) -> DataFrame:
-    """The saved-searches dashboard over a STORED archive: one scan,
-    pruned at scan level to the union of every query's matching templates
-    (one ``isin`` pushdown — row groups outside ALL queries are skipped
-    on footer stats), decoded once, attributed per query by
-    :func:`search_encoded_multi`.  Semantics and guards are exactly
-    :func:`search_stored_archive` per query; output carries
-    ``query_name`` like :func:`search_encoded_multi`."""
-    from fluent_bit_clp_spark.operators.archive import from_archive
-
-    if not queries:
-        raise ValueError("queries must be a non-empty {name: wildcard} map")
-    pruned = _pruned_archive(
-        archive,
+    pruned = template_prune(
+        archive, archive_dictionary,
         [compile_relaxed_pattern(q, ignore_case) for q in queries.values()],
-        archive_dictionary, max_templates, verify_coverage, time_range, ts_col,
+        "logtype_stored", "logtype", max_templates,
     )
     return search_encoded_multi(
         from_archive(pruned), queries, None, mode, var_dictionary, ignore_case

@@ -191,7 +191,6 @@ class JobConfig:
                                          # storage layout (operators/
                                          # archive.py; CLP's kind-typed
                                          # placeholder trick, 0.57x bytes)
-    long_text_bytes: int = 16384
     errors: list[str] = field(default_factory=list, repr=False)
 
     def validate(self) -> "JobConfig":

@@ -6,10 +6,11 @@ the loop: compress → search → EXTRACT).
 
 Reads a committed run's sink table (either ``--sink-layout``; the layout
 comes from the data marker via ``load_sinks``), decodes every row back to
-its original text with the production Arrow decode path, and writes one
-text area per sink (``text/sink=<name>/*.txt``), rows ordered by
-(conv_id, turn_idx) within each file — the pipeline's explicit ordering
-keys (row order inside stored sink files is storage-internal).
+its original text with the native decoder (``clp_native.clp_decode``, a
+Catalyst expression: no Python worker), and writes one text area per sink
+(``text/sink=<name>/*.txt``), rows ordered by (conv_id, turn_idx) within
+each file — the pipeline's explicit ordering keys (row order inside
+stored sink files is storage-internal).
 
     spark-submit --py-files fluent_bit_clp_spark.zip jobs/extract_text.py \
         --input <sink-root> --output <text-root> --run-id run-2026-08-16 \
@@ -57,7 +58,7 @@ def extract(
     applies to the reconstructed view — one pass either way.)"""
     from pyspark.sql import functions as F
 
-    from fluent_bit_clp_spark.functions.clp_pandas import clp_decode_pandas
+    from fluent_bit_clp_spark.functions.clp_native import clp_decode
     from fluent_bit_clp_spark.operators.search import search_encoded
     from fluent_bit_clp_spark.plans import lineage
     from fluent_bit_clp_spark.plans.pipeline import load_sinks
@@ -83,7 +84,7 @@ def extract(
     if query is not None:
         df = search_encoded(df, query, mode=mode, ignore_case=ignore_case)
     total = df.count()
-    dec = clp_decode_pandas(df, mode=mode).select(
+    dec = clp_decode(df, mode=mode).select(
         "sink", "conv_id", "turn_idx", "decoded_text"
     )
     ok = dec.where(F.col("decoded_text").isNotNull())

@@ -4,6 +4,7 @@ explicit (conv_id, turn_idx) keys, for BOTH sink layouts."""
 
 import glob
 import os
+import re
 import sys
 
 import pytest
@@ -38,6 +39,30 @@ def test_extract_roundtrips_texts(spark, tmp_path, layout):
             lines.extend(ln.rstrip("\n") for ln in fh)
     want = sorted(r.text for r in df.where(F.col("text").isNotNull())
                   .select("text").collect())
+    assert sorted(lines) == want
+
+
+@pytest.mark.parametrize("layout", ["working", "archive"])
+def test_extract_4byte_roundtrips_texts(spark, tmp_path, layout):
+    """A 4byte-mode run extracts byte-exact: the decoder takes the run's
+    committed encoding mode (an i64 decode of 4byte float words renders
+    wrong digits)."""
+    from extract_text import extract
+
+    df = transcripts(spark, 300, with_edge_rows=False)
+    root = str(tmp_path / f"run4_{layout}")
+    cfg = JobConfig(sink_layout=layout, encoding_mode="4byte")
+    run_to_sinks(spark, df, root, "run-4", cfg=cfg)
+    out = str(tmp_path / f"txt4_{layout}")
+    summary = extract(spark, root, out, "run-4")
+    want = sorted(r.text for r in df.where(F.col("text").isNotNull())
+                  .select("text").collect())
+    assert any(re.search(r"\d\.\d", t) for t in want)  # floats exercised
+    assert summary["rows_written"] == len(want)
+    lines = []
+    for f in glob.glob(os.path.join(out, "text", "sink=*", "part-*.txt")):
+        with open(f) as fh:
+            lines.extend(ln.rstrip("\n") for ln in fh)
     assert sorted(lines) == want
 
 

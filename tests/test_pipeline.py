@@ -523,7 +523,7 @@ def test_empty_input_commits_zero_counters(spark, tmp_path, tiny, layout):
 def test_run_to_sinks_4byte_mode(spark, tmp_path, tiny):
     """encoding_mode='4byte' flows cfg→pipeline→sink: encoded values fit
     four bytes and the written output decodes back to the input text."""
-    from fluent_bit_clp_spark.functions.clp_pandas import clp_decode_pandas
+    from fluent_bit_clp_spark.functions.clp_native import clp_decode
     from fluent_bit_clp_spark.sources.tables import JobConfig
 
     cfg = JobConfig(
@@ -541,7 +541,7 @@ def test_run_to_sinks_4byte_mode(spark, tmp_path, tiny):
         )).alias("m")
     ).collect()[0]["m"]
     assert mx < (1 << 32)
-    dec = clp_decode_pandas(back, "t", mode="4byte")
+    dec = clp_decode(back, "t", mode="4byte")
     inp = tiny.select("conv_id", "turn_idx", F.col("text").alias("orig"))
     j = dec.join(inp, ["conv_id", "turn_idx"])
     bad = j.where(

@@ -920,6 +920,33 @@ def test_context_search_probe_plan(spark, tmp_path):
     )
 
 
+def test_archive_search_reconstructs_once(spark, tmp_path, encoded):
+    """Plan pin: a single-query stored-archive search evaluates
+    from_archive's reconstruction once.  Prune and decode-verify in one
+    fused Filter let Catalyst inline the reconstruction into every
+    predicate that reads it (3 ``array_sort`` and 9
+    ``regexp_extract_all``); the dashboard shape filters on the prune,
+    then decodes and tags in a Project over the same rows."""
+    from fluent_bit_clp_spark.operators.archive import to_archive
+    from fluent_bit_clp_spark.operators.search import (
+        archive_logtype_dictionary,
+        search_stored_archive,
+    )
+
+    p = str(tmp_path / "arch_once")
+    to_archive(encoded).write.parquet(p)
+    arch = spark.read.parquet(p)
+    query = "Task * started by user * at attempt *"
+    hits = search_stored_archive(
+        arch, query, archive_logtype_dictionary(arch), var_dictionary=True
+    )
+    assert "query_name" not in hits.columns
+    assert hits.count() == _naive(encoded, query).count() > 0
+    plan = hits._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("array_sort") == 1, plan[:3000]
+    assert plan.count("regexp_extract_all") == 1, plan[:3000]
+
+
 # --- property-based differential (hypothesis) -------------------------------
 
 from hypothesis import given, settings
