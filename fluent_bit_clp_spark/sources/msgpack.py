@@ -13,16 +13,21 @@ The reference ingests Fluent Bit Msgpack chunks: a stream of top-level
   timestamp is the first element of the inner array, which must have ≥2
   elements (decoder.go:114-115,153-159).
 
-The record is marshalled to JSON (decoder.go:166-172); Go's
-``json.Marshal`` emits map keys in sorted order, which we mirror with
-``sort_keys=True`` + compact separators.  Parity is **semantic, not
-byte-exact** (ADVICE r2): Go additionally HTML-escapes ``<``, ``>``,
-``&`` as ``\\u003c``-style sequences, which we deliberately do not — both
-forms parse to identical values, and the unescaped form is what every
-downstream JSON consumer (P3, DuckDB oracle) compares on.  Non-finite
-floats (NaN/±Inf — legal msgpack, invalid JSON) follow the reference's
-``json.Marshal``-error path: the record is flagged malformed rather than
-emitting unparseable ``NaN`` text (``allow_nan=False``).
+The record is marshalled to JSON (decoder.go:166-172) by one walker over
+the msgpack bytes, which emits the JSON text directly; like Go's
+``json.Marshal`` it emits map keys in sorted order, with compact
+separators.  Parity is **semantic, not byte-exact** (ADVICE r2): Go
+additionally HTML-escapes ``<``, ``>``, ``&`` as ``\\u003c``-style
+sequences, which we deliberately do not — both forms parse to identical
+values, and the unescaped form is what every downstream JSON consumer
+(P3, DuckDB oracle) compares on.  Values with no JSON form follow the
+reference's decoder: bin renders as UTF-8 text (RawToString) and ext as
+``null``.  Map keys must be strings: str and bin keys render as their
+text, int/float/bool/nil keys as Python's ``str()`` of the value.
+Non-finite floats (NaN/±Inf — legal msgpack, invalid JSON) follow the
+reference's ``json.Marshal``-error path: the record becomes one malformed
+row rather than unparseable ``NaN`` text.  An ext, array or map key (no
+text form) gets the same malformed row.
 
 Deviation (same stance as ``plans.pipeline.parse_normalize``): the
 reference substitutes wall-clock *now* for unrecognized timestamp types
@@ -35,7 +40,7 @@ of that chunk with a single ``malformed`` row (msgpack cannot re-sync
 after a framing error).
 
 Spark shape: one input row per chunk blob (``binaryFile`` source or any
-(src, content) table) → ``mapInPandas`` fan-out to records.  Chunks are
+(src, content) table) → ``mapInArrow`` fan-out to records.  Chunks are
 the unit of parallelism — Fluent Bit emits ~2 MiB chunks, so a 100 TB
 backlog is ~50M chunk rows spread uniformly across executors; the decode
 itself is per-chunk sequential by format (msgpack has no split points),
@@ -80,292 +85,87 @@ class _FlbTime:
         return self.sec * 1000 + self.nsec // 1_000_000
 
 
-class _Ext:
-    __slots__ = ("code", "data")
-
-    def __init__(self, code: int, data: bytes):
-        self.code = code
-        self.data = data
-
-
 # Marker dispatch (VERDICT r2 #5: the decode is the Python-side ingest
-# ceiling — the original if-chain paid up to ~25 comparisons per object).
-# Hot markers (fixint / fixstr / fixmap / fixarray) are inlined in
-# _decode_one; everything else goes through a precompiled-Struct handler
-# table — measured ~1.4× on realistic Fluent Bit chunks, see BENCH.md.
+# ceiling — an if-chain pays up to ~25 comparisons per object).  Hot
+# markers (fixint / fixstr / fixmap / fixarray) are tested first in
+# _emit_json; the sized formats go through precompiled-Struct tables.
 
-_SH = struct.Struct(">H")
-_SI = struct.Struct(">I")
-_SQ = struct.Struct(">Q")
-_Sb = struct.Struct(">b")
-_Sh = struct.Struct(">h")
-_Si = struct.Struct(">i")
-_Sq = struct.Struct(">q")
-_Sf = struct.Struct(">f")
-_Sd = struct.Struct(">d")
-_SBb = struct.Struct(">Bb")
-_SHb = struct.Struct(">Hb")
-_SIb = struct.Struct(">Ib")
+_INT = {  # uint8/16/32/64 (0xCC-0xCF), int8/16/32/64 (0xD0-0xD3)
+    m: struct.Struct(f)
+    for m, f in zip(
+        range(0xCC, 0xD4), (">B", ">H", ">I", ">Q", ">b", ">h", ">i", ">q")
+    )
+}
+_FLOAT = {0xCA: struct.Struct(">f"), 0xCB: struct.Struct(">d")}
+_SB, _SH, _SI = _INT[0xCC], _INT[0xCD], _INT[0xCE]
+_SII = struct.Struct(">II")
+_RAW_LEN = {  # str8/16/32 and bin8/16/32 → the length field
+    0xD9: _SB, 0xDA: _SH, 0xDB: _SI, 0xC4: _SB, 0xC5: _SH, 0xC6: _SI,
+}
+_EXT_LEN = {0xC7: _SB, 0xC8: _SH, 0xC9: _SI}  # ext8/16/32: length, type
 
 
-def _take_bytes(buf: bytes, pos: int, n: int):
-    end = pos + n
+def _take_raw(buf: bytes, pos: int, length: struct.Struct):
+    """str/bin payload whose length field starts at ``pos`` → (text, end)."""
+    start = pos + length.size
+    end = start + length.unpack_from(buf, pos)[0]
     if end > len(buf):
         raise MsgpackError("truncated payload")
-    return buf[pos:end], end
+    # RawToString analogue (decoder.go:62): str and bin alike are text.
+    return buf[start:end].decode("utf-8", "replace"), end
 
 
-def _take_str(buf: bytes, pos: int, n: int):
-    end = pos + n
+def _is_ext(b: int) -> bool:
+    return 0xD4 <= b <= 0xD8 or 0xC7 <= b <= 0xC9
+
+
+def _ext_span(buf: bytes, b: int, pos: int):
+    """ext/fixext marker ``b``, header at ``pos`` → (type, data start, end)."""
+    if b >= 0xD4:  # fixext 1/2/4/8/16: type byte, then the data
+        start = pos + 1
+        end = start + (1 << (b - 0xD4))
+        code = buf[pos]
+    else:  # ext 8/16/32: length, type byte, then the data
+        length = _EXT_LEN[b]
+        start = pos + length.size + 1
+        end = start + length.unpack_from(buf, pos)[0]
+        code = buf[start - 1]
     if end > len(buf):
         raise MsgpackError("truncated payload")
-    # RawToString analogue (decoder.go:62): strings, not byte arrays.
-    return buf[pos:end].decode("utf-8", errors="replace"), end
+    return code, start, end
 
 
-def _decode_array(buf: bytes, pos: int, n: int):
-    # fixstr / positive-fixint elements are decoded inline (log records
-    # are dominated by short strings — the recursive _decode_one call
-    # per element was ~40% of decode CPU; same fast path as _decode_map)
-    out = []
-    append = out.append
-    blen = len(buf)
-    for _ in range(n):
-        b = buf[pos]
-        if 0xA0 <= b <= 0xBF:
-            end = pos + 1 + (b & 0x1F)
-            if end > blen:
-                raise MsgpackError("truncated payload")
-            v = buf[pos + 1 : end].decode("utf-8", "replace")
-            pos = end
-        elif b <= 0x7F:
-            v = b
-            pos += 1
-        else:
-            v, pos = _decode_one(buf, pos)
-        append(v)
-    return out, pos
-
-
-def _decode_map(buf: bytes, pos: int, n: int):
-    out = {}
-    blen = len(buf)
-    for _ in range(n):
-        b = buf[pos]
-        if 0xA0 <= b <= 0xBF:  # fixstr key — the overwhelmingly hot case
-            end = pos + 1 + (b & 0x1F)
-            if end > blen:
-                raise MsgpackError("truncated payload")
-            k = buf[pos + 1 : end].decode("utf-8", "replace")
-            pos = end
-        else:
-            k, pos = _decode_one(buf, pos)
-            if k.__class__ is not str:
-                if isinstance(k, bytes):  # RawToString analogue, bin keys
-                    k = k.decode("utf-8", errors="replace")
-                else:
-                    k = str(k)
-        b = buf[pos]
-        if 0xA0 <= b <= 0xBF:  # fixstr value
-            end = pos + 1 + (b & 0x1F)
-            if end > blen:
-                raise MsgpackError("truncated payload")
-            v = buf[pos + 1 : end].decode("utf-8", "replace")
-            pos = end
-        elif b <= 0x7F:  # positive fixint value
-            v = b
-            pos += 1
-        else:
-            v, pos = _decode_one(buf, pos)
-        out[k] = v
-    return out, pos
-
-
-def _h_nil(buf, pos):
+def _array_head(buf: bytes, pos: int):
+    """Array header at ``pos`` → (count, first element pos); the count is
+    None when the object there is not an array."""
+    b = buf[pos]
+    if 0x90 <= b <= 0x9F:
+        return b & 0x0F, pos + 1
+    if b == 0xDC:
+        return _SH.unpack_from(buf, pos + 1)[0], pos + 3
+    if b == 0xDD:
+        return _SI.unpack_from(buf, pos + 1)[0], pos + 5
     return None, pos
 
 
-def _h_false(buf, pos):
-    return False, pos
-
-
-def _h_true(buf, pos):
-    return True, pos
-
-
-def _h_bin8(buf, pos):
-    return _take_bytes(buf, pos + 1, buf[pos])
-
-
-def _h_bin16(buf, pos):
-    return _take_bytes(buf, pos + 2, _SH.unpack_from(buf, pos)[0])
-
-
-def _h_bin32(buf, pos):
-    return _take_bytes(buf, pos + 4, _SI.unpack_from(buf, pos)[0])
-
-
-def _h_ext8(buf, pos):
-    n, code = _SBb.unpack_from(buf, pos)
-    data, pos = _take_bytes(buf, pos + 2, n)
-    return _Ext(code, data), pos
-
-
-def _h_ext16(buf, pos):
-    n, code = _SHb.unpack_from(buf, pos)
-    data, pos = _take_bytes(buf, pos + 3, n)
-    return _Ext(code, data), pos
-
-
-def _h_ext32(buf, pos):
-    n, code = _SIb.unpack_from(buf, pos)
-    data, pos = _take_bytes(buf, pos + 5, n)
-    return _Ext(code, data), pos
-
-
-def _mk_fixext(n):
-    def h(buf, pos):
-        code = _Sb.unpack_from(buf, pos)[0]
-        data, end = _take_bytes(buf, pos + 1, n)
-        return _Ext(code, data), end
-
-    return h
-
-
-_TABLE = {
-    0xC0: _h_nil,
-    0xC2: _h_false,
-    0xC3: _h_true,
-    0xC4: _h_bin8,
-    0xC5: _h_bin16,
-    0xC6: _h_bin32,
-    0xC7: _h_ext8,
-    0xC8: _h_ext16,
-    0xC9: _h_ext32,
-    0xCA: lambda buf, pos: (_Sf.unpack_from(buf, pos)[0], pos + 4),
-    0xCB: lambda buf, pos: (_Sd.unpack_from(buf, pos)[0], pos + 8),
-    0xCC: lambda buf, pos: (buf[pos], pos + 1),
-    0xCD: lambda buf, pos: (_SH.unpack_from(buf, pos)[0], pos + 2),
-    0xCE: lambda buf, pos: (_SI.unpack_from(buf, pos)[0], pos + 4),
-    0xCF: lambda buf, pos: (_SQ.unpack_from(buf, pos)[0], pos + 8),
-    0xD0: lambda buf, pos: (_Sb.unpack_from(buf, pos)[0], pos + 1),
-    0xD1: lambda buf, pos: (_Sh.unpack_from(buf, pos)[0], pos + 2),
-    0xD2: lambda buf, pos: (_Si.unpack_from(buf, pos)[0], pos + 4),
-    0xD3: lambda buf, pos: (_Sq.unpack_from(buf, pos)[0], pos + 8),
-    0xD4: _mk_fixext(1),
-    0xD5: _mk_fixext(2),
-    0xD6: _mk_fixext(4),
-    0xD7: _mk_fixext(8),
-    0xD8: _mk_fixext(16),
-    0xD9: lambda buf, pos: _take_str(buf, pos + 1, buf[pos]),
-    0xDA: lambda buf, pos: _take_str(buf, pos + 2, _SH.unpack_from(buf, pos)[0]),
-    0xDB: lambda buf, pos: _take_str(buf, pos + 4, _SI.unpack_from(buf, pos)[0]),
-    0xDC: lambda buf, pos: _decode_array(buf, pos + 2, _SH.unpack_from(buf, pos)[0]),
-    0xDD: lambda buf, pos: _decode_array(buf, pos + 4, _SI.unpack_from(buf, pos)[0]),
-    0xDE: lambda buf, pos: _decode_map(buf, pos + 2, _SH.unpack_from(buf, pos)[0]),
-    0xDF: lambda buf, pos: _decode_map(buf, pos + 4, _SI.unpack_from(buf, pos)[0]),
-}
-
-
-def _decode_one(buf: bytes, pos: int):
-    """Decode one msgpack object at ``pos`` → (value, new_pos).
-
-    Covers the public-spec formats Fluent Bit produces: nil/bool, all
-    int/uint widths, float32/64, str, bin, array, map, fixext/ext.
-    Truncation surfaces as MsgpackError / struct.error / IndexError —
-    all converted to one malformed row at the iter_records boundary.
-    """
-    try:
-        b = buf[pos]
-    except IndexError:
-        raise MsgpackError("truncated stream") from None
-    pos += 1
-    if b <= 0x7F:  # positive fixint
-        return b, pos
-    if 0xA0 <= b <= 0xBF:  # fixstr (hottest marker in log records)
-        return _take_str(buf, pos, b & 0x1F)
-    if b >= 0xE0:  # negative fixint
-        return b - 0x100, pos
-    if b <= 0x8F:  # fixmap (0x80-0x8F; < 0x80 handled above)
-        return _decode_map(buf, pos, b & 0x0F)
-    if b <= 0x9F:  # fixarray
-        return _decode_array(buf, pos, b & 0x0F)
-    try:
-        handler = _TABLE[b]
-    except KeyError:
-        raise MsgpackError(f"unsupported msgpack marker 0x{b:02x}") from None
-    return handler(buf, pos)
-
-
-def _json_default(v):
-    """json.dumps ``default`` hook — replaces the old full-tree pre-walk
-    (_jsonable) so plain dict/list/str/int values serialize with zero
-    extra copies; only the exotic types pay the hook call."""
-    if isinstance(v, bytes):
-        return v.decode("utf-8", errors="replace")
-    if isinstance(v, _FlbTime):
-        return v.to_ms()
-    if isinstance(v, _Ext):
-        return None
-    raise TypeError(f"unencodable {type(v)}")
-
-
-_I64_MAX = (1 << 63) - 1
-
-
-def _ts_to_ms(ts, ts_mode: str):
-    """The plugins' timestamp type switch.  Returns (ts_ms | None, ok).
-
-    A uint64 beyond int64 range (legal msgpack; the Go reference would
-    wrap it through int64(t) into garbage) is flagged malformed instead —
-    emitting it would overflow the Arrow bigint column and kill the task.
-    """
-    if isinstance(ts, _Ext):
-        if ts.code == FLB_TIME_EXT_TYPE and len(ts.data) == 8:
-            sec, nsec = struct.unpack(">II", ts.data)  # decoder.go:80-84
-            return _FlbTime(sec, nsec).to_ms(), True
-        return None, False
-    if isinstance(ts, int) and not isinstance(ts, bool) and ts >= 0:
-        # v2: UnixMilli (out_clp_s3_v2.go:289-290);
-        # v1: Unix seconds (flush.go:126-127)
-        ms = ts if ts_mode == "v2" else ts * 1000
-        if ms > _I64_MAX:
-            return None, False
-        return ms, True
-    return None, False
-
-
-def _marshal_json(record) -> str:
-    return json.dumps(
-        record,
-        default=_json_default,
-        sort_keys=True,  # Go json.Marshal emits sorted map keys
-        separators=(",", ":"),
-        ensure_ascii=False,
-        # NaN/Inf: Go json.Marshal errors and the reference drops
-        # the record (GetRecord returns the marshal error) — we
-        # flag it malformed instead of emitting invalid JSON.
-        allow_nan=False,
-    )
-
-
-# Fused decode→JSON emitter (round 6).  json.dumps of the decoded map was
-# ~27% of iter_records wall time (BENCH.md msgpack ceiling); emitting the
-# JSON text directly while walking the msgpack bytes skips the
-# intermediate dict/list tree for the dominant record shapes.  Output is
-# pinned byte-identical to the _marshal_json path (differential property
-# test); anything the emitter doesn't fuse (bin/ext values, non-fixstr
-# map keys, non-finite floats, recursion-limit nesting) raises _Bail and
-# the record is replayed through _decode_one + _marshal_json, so the
-# exotic-type and malformed semantics are exactly the fallback's.
+# One decode→JSON walker (round 6 fused it; it is now the only decoder).
+# json.dumps of a decoded map was ~27% of iter_records wall time (BENCH.md
+# msgpack ceiling); emitting the JSON text directly while walking the
+# msgpack bytes skips the intermediate dict/list tree.  int repr (str()),
+# float repr (float.__repr__) and string escaping match json.dumps
+# exactly.  A value that must make the record malformed (a non-finite
+# float, a key with no text form) renders as a NUL: _emit_str escapes
+# every control character, so a NUL in the record text can only be this
+# sentinel, and the walk still consumes the record so the next decodes.
 
 _NEEDS_ESC = re.compile(r'["\\\x00-\x1f]')
 _esc_str = json.encoder.encode_basestring  # same escape set as the
 # C encoder with ensure_ascii=False: ["\\\x00-\x1f] only
 
-
-class _Bail(Exception):
-    pass
+_NUL = "\x00"
+_BAD_KEY = (_NUL, _NUL)
+_WORDS = {0xC0: "null", 0xC2: "false", 0xC3: "true"}  # nil, false, true
+_KEY_WORDS = {0xC0: "None", 0xC2: "False", 0xC3: "True"}  # their str()
 
 
 def _emit_str(s: str) -> str:
@@ -382,6 +182,29 @@ _KEY_CACHE: dict[bytes, tuple[str, str]] = {}
 _KEY_CACHE_MAX = 4096
 
 
+def _emit_key(buf: bytes, pos: int):
+    """A non-fixstr map key → ((text, quoted), new_pos).
+
+    JSON keys are strings: str/bin keys render as their text, int, float,
+    bool and nil keys as Python's ``str()`` of the value.  An ext, array
+    or map key, or a non-finite float key, has no text form: it is
+    consumed and its pair is the NUL sentinel, which flags the record.
+    """
+    b = buf[pos]
+    length = _RAW_LEN.get(b)
+    if length is not None:
+        k, pos = _take_raw(buf, pos + 1, length)
+    elif b in _KEY_WORDS:
+        k, pos = _KEY_WORDS[b], pos + 1
+    else:
+        # the JSON text of an int or a finite float is its str()
+        k, pos = _emit_json(buf, pos)
+        numeric = b <= 0x7F or b >= 0xE0 or b in _INT or b in _FLOAT
+        if k == _NUL or not numeric:
+            return _BAD_KEY, pos
+    return (k, _emit_str(k)), pos
+
+
 def _emit_map(buf, pos, n):
     # entries keyed by (raw, quoted) so duplicate keys dedup keep-last
     # exactly like dict construction, and sorting orders by the raw key
@@ -394,7 +217,7 @@ def _emit_map(buf, pos, n):
         if 0xA0 <= b <= 0xBF:  # fixstr key — the overwhelmingly hot case
             end = pos + 1 + (b & 0x1F)
             if end > blen:
-                raise _Bail
+                raise MsgpackError("truncated payload")
             kb = buf[pos + 1 : end]
             kq = cache.get(kb)
             if kq is None:
@@ -404,12 +227,12 @@ def _emit_map(buf, pos, n):
                     cache[kb] = kq
             pos = end
         else:
-            raise _Bail  # non-fixstr key (str8/int/bin): replay generic
+            kq, pos = _emit_key(buf, pos)
         b = buf[pos]
         if 0xA0 <= b <= 0xBF:  # fixstr value
             end = pos + 1 + (b & 0x1F)
             if end > blen:
-                raise _Bail
+                raise MsgpackError("truncated payload")
             entries[kq] = _emit_str(buf[pos + 1 : end].decode("utf-8", "replace"))
             pos = end
         elif b <= 0x7F:  # positive fixint value
@@ -430,7 +253,7 @@ def _emit_arr(buf, pos, n):
         if 0xA0 <= b <= 0xBF:
             end = pos + 1 + (b & 0x1F)
             if end > blen:
-                raise _Bail
+                raise MsgpackError("truncated payload")
             append(_emit_str(buf[pos + 1 : end].decode("utf-8", "replace")))
             pos = end
         else:
@@ -445,17 +268,17 @@ _INF = float("inf")
 def _emit_json(buf: bytes, pos: int) -> tuple[str, int]:
     """Emit JSON text for one msgpack object at ``pos`` → (text, new_pos).
 
-    Same marker coverage as _decode_one for the JSON-native types; int
-    repr (str()), float repr (float.__repr__) and string escaping match
-    json.dumps exactly.  Raises _Bail (or IndexError/struct.error on
-    truncation, handled by iter_records' abort path) otherwise.
+    Covers the public-spec formats Fluent Bit produces: nil/bool, all
+    int/uint widths, float32/64, str, bin, array, map, fixext/ext.
+    Truncation surfaces as MsgpackError / struct.error / IndexError —
+    all converted to one malformed row at the iter_records boundary.
     """
     b = buf[pos]
     pos += 1
-    if 0xA0 <= b <= 0xBF:  # fixstr
+    if 0xA0 <= b <= 0xBF:  # fixstr (hottest marker in log records)
         end = pos + (b & 0x1F)
         if end > len(buf):
-            raise _Bail
+            raise MsgpackError("truncated payload")
         return _emit_str(buf[pos:end].decode("utf-8", "replace")), end
     if b <= 0x7F:  # positive fixint
         return str(b), pos
@@ -465,59 +288,25 @@ def _emit_json(buf: bytes, pos: int) -> tuple[str, int]:
         return _emit_map(buf, pos, b & 0x0F)
     if b <= 0x9F:  # fixarray
         return _emit_arr(buf, pos, b & 0x0F)
-    if b == 0xC0:
-        return "null", pos
-    if b == 0xC2:
-        return "false", pos
-    if b == 0xC3:
-        return "true", pos
-    if b == 0xD9:
-        n = buf[pos]
-        pos += 1
-        end = pos + n
-        if end > len(buf):
-            raise _Bail
-        return _emit_str(buf[pos:end].decode("utf-8", "replace")), end
-    if b == 0xDA:
-        n = _SH.unpack_from(buf, pos)[0]
-        pos += 2
-        end = pos + n
-        if end > len(buf):
-            raise _Bail
-        return _emit_str(buf[pos:end].decode("utf-8", "replace")), end
-    if b == 0xDB:
-        n = _SI.unpack_from(buf, pos)[0]
-        pos += 4
-        end = pos + n
-        if end > len(buf):
-            raise _Bail
-        return _emit_str(buf[pos:end].decode("utf-8", "replace")), end
-    if b == 0xCC:
-        return str(buf[pos]), pos + 1
-    if b == 0xCD:
-        return str(_SH.unpack_from(buf, pos)[0]), pos + 2
-    if b == 0xCE:
-        return str(_SI.unpack_from(buf, pos)[0]), pos + 4
-    if b == 0xCF:
-        return str(_SQ.unpack_from(buf, pos)[0]), pos + 8
-    if b == 0xD0:
-        return str(_Sb.unpack_from(buf, pos)[0]), pos + 1
-    if b == 0xD1:
-        return str(_Sh.unpack_from(buf, pos)[0]), pos + 2
-    if b == 0xD2:
-        return str(_Si.unpack_from(buf, pos)[0]), pos + 4
-    if b == 0xD3:
-        return str(_Sq.unpack_from(buf, pos)[0]), pos + 8
-    if b == 0xCA:
-        f = _Sf.unpack_from(buf, pos)[0]
+    word = _WORDS.get(b)
+    if word is not None:
+        return word, pos
+    st = _RAW_LEN.get(b)
+    if st is not None:
+        text, end = _take_raw(buf, pos, st)
+        return _emit_str(text), end
+    st = _INT.get(b)
+    if st is not None:
+        return str(st.unpack_from(buf, pos)[0]), pos + st.size
+    st = _FLOAT.get(b)
+    if st is not None:
+        f = st.unpack_from(buf, pos)[0]
         if f != f or f == _INF or f == -_INF:
-            raise _Bail  # allow_nan=False path
-        return repr(f), pos + 4
-    if b == 0xCB:
-        f = _Sd.unpack_from(buf, pos)[0]
-        if f != f or f == _INF or f == -_INF:
-            raise _Bail
-        return repr(f), pos + 8
+            # NaN/Inf: Go json.Marshal errors and the reference drops
+            # the record (GetRecord returns the marshal error) — we
+            # flag it malformed instead of emitting invalid JSON.
+            return _NUL, pos + st.size
+        return repr(f), pos + st.size
     if b == 0xDC:
         return _emit_arr(buf, pos + 2, _SH.unpack_from(buf, pos)[0])
     if b == 0xDD:
@@ -526,7 +315,66 @@ def _emit_json(buf: bytes, pos: int) -> tuple[str, int]:
         return _emit_map(buf, pos + 2, _SH.unpack_from(buf, pos)[0])
     if b == 0xDF:
         return _emit_map(buf, pos + 4, _SI.unpack_from(buf, pos)[0])
-    raise _Bail  # bin/ext/unknown marker → replay on the generic path
+    if _is_ext(b):  # foreign ext values render as null (decoder policy)
+        return "null", _ext_span(buf, b, pos)[2]
+    raise MsgpackError(f"unsupported msgpack marker 0x{b:02x}")
+
+
+# A v2 metadata array below minMetadataLen (decoder.go:114-115): the
+# whole row is malformed, not just its timestamp.
+_BROKEN = object()
+# Spark's timestamp_millis multiplies by 1000 into a long, so a larger
+# stamp raises ArithmeticException and kills the ingest job.
+_TS_MS_MAX = ((1 << 63) - 1) // 1000
+
+
+def _ts_value(buf: bytes, pos: int, ts_mode: str):
+    """One timestamp value at ``pos`` → (ts_ms | None, new_pos)."""
+    b = buf[pos]
+    pos += 1
+    if _is_ext(b):
+        code, start, end = _ext_span(buf, b, pos)
+        if code == FLB_TIME_EXT_TYPE and end - start == 8:
+            sec, nsec = _SII.unpack_from(buf, start)  # decoder.go:80-84
+            return _FlbTime(sec, nsec).to_ms(), end
+        return None, end
+    if b <= 0x7F:
+        v = b
+    elif b in _INT:
+        st = _INT[b]
+        v = st.unpack_from(buf, pos)[0]
+        pos += st.size
+    else:  # any other type is skipped; the row is flagged
+        return None, _emit_json(buf, pos - 1)[1]
+    if v < 0:
+        return None, pos
+    # v2: UnixMilli (out_clp_s3_v2.go:289-290);
+    # v1: Unix seconds (flush.go:126-127)
+    ms = v if ts_mode == "v2" else v * 1000
+    # Out of Spark's range (a uint64 >= 2^63 included — legal msgpack; the
+    # Go reference would wrap it through int64(t) into garbage): flagged
+    # malformed instead of overflowing the bigint column or the ts cast.
+    return (ms if ms <= _TS_MS_MAX else None), pos
+
+
+def _read_ts(buf: bytes, pos: int, ts_mode: str):
+    """The plugins' timestamp type switch → (ts_ms, new_pos).
+
+    ``ts_ms`` is None for an unrecognized or out-of-range stamp (row
+    flagged, record kept) and ``_BROKEN`` for a short metadata array.
+    """
+    count, epos = _array_head(buf, pos)
+    if count is None:
+        return _ts_value(buf, pos, ts_mode)
+    # v2 metadata layout [[ts, meta…], record]
+    if count < 2:
+        ms = _BROKEN
+    else:
+        ms, epos = _ts_value(buf, epos, ts_mode)
+        count -= 1
+    for _ in range(count):
+        epos = _emit_json(buf, epos)[1]
+    return ms, epos
 
 
 def iter_records(
@@ -542,53 +390,26 @@ def iter_records(
     n = len(blob)
     while pos < n:
         try:
-            if blob[pos] == 0x92:  # fixarray(2) — every wire layout's
-                # top level; fused decode→emit fast path
-                ts, rpos = _decode_one(blob, pos + 1)
-                try:
-                    record_json, pos = _emit_json(blob, rpos)
-                except (_Bail, RecursionError):
-                    record, pos = _decode_one(blob, rpos)
-                    try:
-                        record_json = _marshal_json(record)
-                    except (RecursionError, ValueError):
-                        yield None, None, True
-                        continue
-                if isinstance(ts, list):  # v2 metadata [[ts, meta], msg]
-                    if len(ts) < 2:  # minMetadataLen (decoder.go:114-115)
-                        yield None, None, True
-                        continue
-                    ts = ts[0]
-                ts_ms, ok = _ts_to_ms(ts, ts_mode)
-                yield ts_ms, record_json, not ok
-                continue
-            obj, pos = _decode_one(blob, pos)
+            # fixarray(2) is every wire layout's top level; array16/array32
+            # pairs are spec-legal; anything else is a malformed row
+            count, rpos = _array_head(blob, pos)
+            if count == 2:
+                ts_ms, rpos = _read_ts(blob, rpos, ts_mode)
+                record_json, pos = _emit_json(blob, rpos)
+            else:
+                ts_ms, record_json, pos = _BROKEN, None, _emit_json(blob, pos)[1]
         except (MsgpackError, RecursionError, struct.error, IndexError):
             # RecursionError: adversarially deep nesting (e.g. thousands of
             # wrapped fixarrays) must degrade to a malformed row, not
-            # escape mapInPandas and kill the executor task.
+            # escape mapInArrow and kill the executor task.
             # struct.error/IndexError: truncation inside a precompiled-
-            # Struct handler (same truncated-stream class as MsgpackError).
+            # Struct read (same truncated-stream class as MsgpackError).
             yield None, None, True  # undecodable remainder
             return
-        # generic path: top level wasn't a fixarray(2) (array16/array32
-        # pairs are spec-legal; anything else is a malformed row)
-        if not isinstance(obj, list) or len(obj) != 2:
+        if ts_ms is _BROKEN or _NUL in record_json:
             yield None, None, True
-            continue
-        ts, record = obj
-        if isinstance(ts, list):
-            if len(ts) < 2:
-                yield None, None, True
-                continue
-            ts = ts[0]
-        ts_ms, ok = _ts_to_ms(ts, ts_mode)
-        try:
-            record_json = _marshal_json(record)
-        except (RecursionError, ValueError):
-            yield None, None, True
-            continue
-        yield ts_ms, record_json, not ok
+        else:
+            yield ts_ms, record_json, ts_ms is None
 
 
 def decode_msgpack_chunks(
@@ -599,29 +420,39 @@ def decode_msgpack_chunks(
 ) -> DataFrame:
     """(src, content binary) chunk rows → one row per decoded record.
 
-    ``mapInPandas`` (Arrow-batched) so each executor decodes its chunks
-    independently; output carries (src, rec_idx) lineage for the
+    ``mapInArrow`` so each executor decodes its chunks independently and
+    the batch is built with ``DECODED_SCHEMA``'s types (a pandas frame
+    turns a bigint column holding a null into float64, losing ``ts_ms``
+    precision above 2^53); output carries (src, rec_idx) lineage for the
     malformed-record counters (A1 analogue).
     """
-    import pandas as pd
+    import pyarrow as pa
+
+    schema = pa.schema([  # DECODED_SCHEMA
+        ("src", pa.string()), ("rec_idx", pa.int64()), ("ts_ms", pa.int64()),
+        ("record_json", pa.string()), ("malformed", pa.bool_()),
+    ])
 
     def run(batches):
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for src, blob in zip(pdf[src_col], pdf[blob_col]):
-                if blob is None:
-                    rows.append((src, 0, None, None, True))
-                    continue
-                for i, (ts_ms, rec, bad) in enumerate(
-                    iter_records(bytes(blob), ts_mode)
-                ):
-                    rows.append((src, i, ts_ms, rec, bad))
-            yield pd.DataFrame(
-                rows,
-                columns=["src", "rec_idx", "ts_ms", "record_json", "malformed"],
+            for src, blob in zip(
+                batch.column(src_col).to_pylist(),
+                batch.column(blob_col).to_pylist(),
+            ):
+                recs = (
+                    [(None, None, True)]
+                    if blob is None
+                    else iter_records(blob, ts_mode)
+                )
+                rows += [(src, i, *r) for i, r in enumerate(recs)]
+            cols = list(zip(*rows)) or [()] * len(schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, schema)],
+                schema=schema,
             )
 
-    return chunks.mapInPandas(run, DECODED_SCHEMA)
+    return chunks.mapInArrow(run, DECODED_SCHEMA)
 
 
 def read_msgpack_files(
